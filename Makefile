@@ -1,8 +1,10 @@
 .DEFAULT_GOAL := test
 SHELL := /bin/bash
 SF_DIR ?= /root/testdata/sf0.1
+SEED ?= 1
+TRACE ?= 0
 
-.PHONY: test parity parity-sf1 parity-sf3 bench bench-sf1 scale-curve scale-curve-sf10 build-curve-sf30 forwarder-throughput digest image judge
+.PHONY: test parity parity-sf1 parity-sf3 bench bench-sf1 scale-curve scale-curve-sf10 build-curve-sf30 forwarder-throughput perfbench digest image judge
 
 test:
 	python -m pytest tests/ -x -q
@@ -78,3 +80,12 @@ image:
 # verified): writes FORWARDER_THROUGHPUT.json
 forwarder-throughput:
 	python tools/forwarder_throughput.py --mult 20
+
+# the repo benchmark (BENCHMARK.json): both forwarder workloads at the
+# benchmark's run length (TRACE=1 adds the per-layer metrics), then the
+# selfcheck that plants a dropped record, a duplicated record and a
+# perturbed op result and shows the checks count each
+perfbench:
+	python3 perfbench/run.py --workload forward_drain --seed $(SEED) --seconds 15 --trace $(TRACE)
+	python3 perfbench/run.py --workload forward_paced --seed $(SEED) --seconds 15 --trace $(TRACE)
+	python3 perfbench/selfcheck.py

@@ -12,6 +12,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding this package, put on the Python workers' path
+# so the worker daemon below imports whatever the driver's cwd
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "kinesis-to-firehose-spark", cpus: int | None = None) -> SparkSession:
@@ -26,6 +29,13 @@ def get_spark(app_name: str = "kinesis-to-firehose-spark", cpus: int | None = No
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # pyspark.daemon without the per-task pyspark.zip re-read of
+        # CPython < 3.12 (see worker_daemon)
+        .config(
+            "spark.python.daemon.module",
+            "kinesis_to_firehose_spark.worker_daemon",
+        )
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -8,7 +8,7 @@ firehose_sender.go) in Spark's execution model:
 - SendBatch (firehose_sender.go:96-134): per-record failure retry
   with 250 ms × 2ⁿ backoff, ≤ MAX_RETRIES rounds, then a
   PartialSendBatchError carrying the still-failed records — which the
-  caller appends to the dead-letter file (main.go FailedLogsFile).
+  caller writes to the dead-letter directory (main.go FailedLogsFile).
 - Batch bounds (main.go:50-53): ≤ BATCH_COUNT records and
   ≤ BATCH_SIZE bytes per PutRecordBatch call.
 
@@ -16,8 +16,9 @@ Spark mapping: the unit of delivery parallelism is the partition —
 `foreachPartition` workers each run the batch/retry loop against the
 transport, so delivery scales with the number of partitions instead
 of a single consumer process. Exactly-once: foreachBatch gives the
-sink the epoch id; the default transport writes epoch-scoped files so
-a replayed epoch overwrites rather than duplicates.
+sink the epoch id; the default transport and the dead-letter writer
+both use epoch/task-scoped file names, so a replayed epoch overwrites
+rather than duplicates.
 
 The transport is injectable (tests use flaky/failing fakes; a real
 deployment would wrap boto3 firehose PutRecordBatch — not available
@@ -319,10 +320,22 @@ def deliver_partition(
     sleep: Callable[[float], None] = time.sleep,
     batch_interval_s: float = BATCH_INTERVAL_S,
     clock: Callable[[], float] = time.monotonic,
+    dead_letter_scope: str | None = None,
 ) -> SendStats:
     """Per-partition delivery loop: group arriving rows by stream tag
-    into bounded batches, send each with retries, append exhausted
-    failures to the dead-letter file (main.go FailedLogsFile).
+    into bounded batches, send each with retries, write exhausted
+    failures to the dead-letter directory (main.go FailedLogsFile).
+
+    Each exhausted batch gets its own file, named by
+    `dead_letter_scope` (the epoch and task) plus a sequence number, so
+    a replayed epoch or retried task overwrites its dead letters
+    instead of appending them twice. Without a scope the name carries
+    a random id, as LocalDirTransport does for ad-hoc use.
+
+    A row whose line is null (a payload the decode could not parse) is
+    dropped, as the reference drops a record it cannot process. The
+    check is here rather than a filter in the plan, where Spark would
+    build each line twice: once for the filter, once for the output.
 
     A batch also flushes once it has been open for `batch_interval_s`
     (main.go:48 BatchInterval: 10s) — on a trickle stream latency stays
@@ -332,16 +345,24 @@ def deliver_partition(
     the interval matters only while rows keep arriving slowly)."""
     transport = make_transport()
     stats = SendStats()
+    scope = dead_letter_scope or uuid.uuid4().hex[:8]
+    dead_letter_seq = 0
     # per-stream open batches: (records, bytes, opened_at)
     open_batches: dict[str, tuple[list[bytes], int, float]] = {}
 
     def flush(stream: str, batch: list[bytes]) -> None:
+        nonlocal dead_letter_seq
         try:
             send_batch(transport, batch, stream, stats, sleep)
         except PartialSendBatchError as exc:
-            _append_dead_letters(dead_letter_dir, stream, exc.failed_records)
+            name = f"failed-{stream}-{scope}-{dead_letter_seq:06d}.log"
+            dead_letter_seq += 1
+            _write_dead_letters(dead_letter_dir, name, exc.failed_records)
 
     for row in rows:
+        line = row[line_col]
+        if line is None:
+            continue
         now = clock()
         # interval-expire ALL open batches, not just the arriving row's
         # stream — a quiet stream must not wait for its next record.
@@ -350,7 +371,7 @@ def deliver_partition(
                 flush(s, b)
                 del open_batches[s]
         stream = row[stream_col]
-        rec = (row[line_col] + "\n").encode("utf-8")
+        rec = (line + "\n").encode("utf-8")
         batch, size, opened = open_batches.get(stream, ([], 0, now))
         if batch and (
             len(batch) >= BATCH_COUNT or size + len(rec) > BATCH_SIZE
@@ -365,14 +386,13 @@ def deliver_partition(
     return stats
 
 
-def _append_dead_letters(
-    dead_letter_dir: str | None, stream: str, records: list[bytes]
+def _write_dead_letters(
+    dead_letter_dir: str | None, name: str, records: list[bytes]
 ) -> None:
     if dead_letter_dir is None:
         return
     os.makedirs(dead_letter_dir, exist_ok=True)
-    path = os.path.join(dead_letter_dir, f"failed-{stream}.log")
-    with open(path, "ab") as f:
+    with open(os.path.join(dead_letter_dir, name), "wb") as f:
         for r in records:
             f.write(r)
 
@@ -407,7 +427,10 @@ def firehose_foreach_batch(
                 make = lambda: RetryingTransport(  # noqa: E731
                     LocalDirTransport(output_root, epoch_id, task_id=task_id)
                 )
-            deliver_partition(it, stream_col, line_col, make, dead_letter_dir)
+            deliver_partition(
+                it, stream_col, line_col, make, dead_letter_dir,
+                dead_letter_scope=f"epoch={epoch_id:08d}-task={task_id}",
+            )
 
         df.select(stream_col, line_col).foreachPartition(_run)
 

@@ -1725,6 +1725,128 @@ def test_chaos_soak_kill_resume_mid_delivery(spark, tmp_path):
     assert not os.path.isdir(dl) or not os.listdir(dl), "dead letters"
 
 
+def _replay_payloads(spark, event_type=None):
+    """(partition key, JSON payload) pairs for the sf0.001 events, the
+    payload shape the kinesis_replay pipeline decodes; `event_type`
+    overrides every record's stream tag."""
+    from pyspark.sql import functions as F
+
+    from kinesis_to_firehose_spark.sources.tables import load
+
+    ev = load(spark, "events", SF)
+    if event_type is not None:
+        ev = ev.withColumn("event_type", F.lit(event_type))
+    data = F.to_json(
+        F.struct("event_id", "ts", "user_id", "event_type", "value", "props")
+    )
+    return [
+        (str(r["user_id"]), r["data"])
+        for r in ev.select("user_id", data.alias("data"))
+        .orderBy("event_id")
+        .collect()
+    ]
+
+
+def _delivered_ids(out: str) -> list[int]:
+    return [
+        rec["event_id"]
+        for stream in os.listdir(out)
+        for rec in read_delivered(out, stream)
+    ]
+
+
+def test_undecodable_payload_is_dropped_not_fatal(spark, tmp_path):
+    """A payload from_json cannot parse decodes to a null stream and
+    line. The sink drops it, as the reference drops a record it cannot
+    process: every valid record is delivered exactly once and the query
+    stays up."""
+    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
+        write_replay_slices,
+    )
+    from kinesis_to_firehose_spark.streaming.pipeline import (
+        run_pipeline_replay,
+    )
+
+    d, out = str(tmp_path / "stream"), str(tmp_path / "out")
+    rows = _replay_payloads(spark)
+    write_replay_slices(
+        d, rows[:500] + [("bad", "{not json")] + rows[500:], n_shards=4
+    )
+    q = run_pipeline_replay(spark, d, out, str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+        assert q.isActive and q.exception() is None
+    finally:
+        q.stop()
+        q.awaitTermination()
+    ids = _delivered_ids(out)
+    assert len(ids) == len(rows)
+    assert set(ids) == {json.loads(data)["event_id"] for _, data in rows}
+
+
+def test_dead_letters_exactly_once_under_epoch_replay(spark, tmp_path):
+    """A record that fails every attempt is dead-lettered; the task
+    then crashes, and the resumed query replays the epoch, which
+    dead-letters the record again. The replay must overwrite, not
+    append: one dead-letter line for that record, and every other
+    record delivered exactly once."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
+        write_replay_slices,
+    )
+    from kinesis_to_firehose_spark.streaming.pipeline import (
+        run_pipeline_replay,
+    )
+
+    d, out, dl = (str(tmp_path / n) for n in ("stream", "out", "dl"))
+    ck = str(tmp_path / "ck")
+    crash_marker = str(tmp_path / "crashed-once")
+    # one stream on one shard: a single task sends the doomed record in
+    # its first 500-record batch, and its next batch crashes
+    rows = _replay_payloads(spark, event_type="click")
+    assert len(rows) > BATCH_COUNT
+    doomed_id = json.loads(rows[0][1])["event_id"]
+    doomed = f'"event_id":{doomed_id},'.encode()
+
+    class DoomedRecordTransport:
+        def __init__(self, epoch_id: int):
+            self.inner = LocalDirTransport(out, epoch_id, task_id="p00000")
+
+        def __call__(self, records, stream):
+            if os.path.isdir(dl) and not os.path.exists(crash_marker):
+                open(crash_marker, "w").close()
+                raise ConnectionError("chaos: crash after the dead letter")
+            failed = [i for i, r in enumerate(records) if doomed in r]
+            self.inner([r for r in records if doomed not in r], stream)
+            return failed
+
+    def run():
+        q = run_pipeline_replay(
+            spark, d, out, ck, dead_letter_dir=dl,
+            transport_factory=DoomedRecordTransport,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+
+    write_replay_slices(d, rows, n_shards=1)
+    with pytest.raises(StreamingQueryException, match="chaos"):
+        run()
+    run()
+
+    dead = []
+    for name in os.listdir(dl):
+        with open(os.path.join(dl, name), "rb") as f:
+            dead += f.read().splitlines()
+    assert [json.loads(r)["event_id"] for r in dead] == [doomed_id]
+    ids = _delivered_ids(out)
+    assert len(ids) == len(rows) - 1
+    assert set(ids) == {json.loads(data)["event_id"] for _, data in rows[1:]}
+
+
 def test_ann_ingest_stream_probes_and_appends(spark, tmp_path):
     """Streaming continuous-ingest ANN maintenance (the vector-store
     twin of the dedup ingest stream): each micro-batch's top-k must

@@ -23,6 +23,7 @@ Usage: python tools/forwarder_throughput.py [--mult N] [--out FILE]
 
 from __future__ import annotations
 
+import argparse
 import json
 import shutil
 import sys
@@ -40,16 +41,13 @@ SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    mult = (
-        int(sys.argv[sys.argv.index("--mult") + 1])
-        if "--mult" in sys.argv
-        else 1
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument(
+        "--mult", type=int, default=1, help="replay the events feed N times"
     )
-    out_path = (
-        sys.argv[sys.argv.index("--out") + 1]
-        if "--out" in sys.argv
-        else "FORWARDER_THROUGHPUT.json"
-    )
+    ap.add_argument("--out", default="FORWARDER_THROUGHPUT.json")
+    args = ap.parse_args()
+    mult, out_path = args.mult, args.out
     spark = get_spark("forwarder-throughput")
     from kinesis_to_firehose_spark.streaming.pipeline import (
         decoded_stream,
