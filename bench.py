@@ -13,7 +13,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from kinesis_to_firehose_spark.registry import all_ops
+from kinesis_to_firehose_spark.registry import all_ops, streaming_op_names
 from kinesis_to_firehose_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,12 +48,7 @@ if ACTION not in ("noop", "count"):
 # pools) and measures protocol correctness, not query throughput; the
 # compute they exercise is already timed via decode/serialize/batch
 # ops. They remain in queries() for the driver's correctness gate.
-EXCLUDE: set[str] = {
-    "firehose_sink",
-    "checkpoint_resume",
-    "kinesis_source",
-    "kinesis_replay_source",
-}
+EXCLUDE = streaming_op_names()
 
 
 def host_speed_sentinel() -> float:

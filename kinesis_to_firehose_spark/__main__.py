@@ -130,21 +130,16 @@ def _consume(args) -> int:
             Boto3FirehoseTransport(region_name=region, endpoint_url=endpoint)
         )
     spark = get_spark("kinesis-to-firehose-consume", cpus=args.cpus)
-    common = dict(
+    run = run_pipeline_replay if args.replay else run_pipeline
+    q = run(
+        spark,
+        args.source_dir,
         output_root=args.output_root,
         checkpoint_dir=args.checkpoint_dir,
         dead_letter_dir=args.dead_letter_dir,
         transport_factory=transport_factory,
+        trigger_processing_time=None if args.once else PRODUCTION_TRIGGER,
     )
-    if args.replay:
-        q = run_pipeline_replay(spark, args.source_dir, **common)
-    else:
-        q = run_pipeline(
-            spark,
-            args.source_dir,
-            trigger_processing_time=None if args.once else PRODUCTION_TRIGGER,
-            **common,
-        )
     if args.once:
         q.processAllAvailable()
         q.stop()

@@ -2905,9 +2905,7 @@ def window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count per tumbling hour (ties to the lower user_id). The per-window
 # rank runs over the AGGREGATED (hour, user) table — one count
 # shuffle, then a window over rows already collapsed to one per
-# (hour, user), never per event. Streaming twin: topk_stream
-# (streaming/pipeline.py) with closed-window parity asserted in
-# tests/test_streaming.py.
+# (hour, user), never per event.
 # --------------------------------------------------------------------------
 HOURLY_TOPK = 3
 

@@ -1158,15 +1158,6 @@ def norm_expr_unrolled(a: str, n: int) -> str:
     return f"sqrt({s})"
 
 
-def cosine_expr(a: str, b: str, engine: str) -> str:
-    """Cosine from inline dot + norms (for one-shot use); hot paths
-    should precompute norms as columns and divide instead."""
-    return (
-        f"({dot_expr(a, b, engine)} / "
-        f"({norm_expr(a, engine)} * {norm_expr(b, engine)}))"
-    )
-
-
 # Norms are hoisted to a column before the pair join (computed n times,
 # not n² times); the division tree is identical in both engines.
 NORMED_CTE = f"""

@@ -1359,8 +1359,7 @@ def autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # data-dependent before touching the plan.
 #
 # hll_partition_merge_raw keeps the pure sketch-only surface for the
-# merge-consistency tests (test_mining.py, test_streaming.py's
-# hll_stream parity).
+# merge-consistency tests (test_mining.py).
 # --------------------------------------------------------------------------
 # Shared absolute floor for HLL error bounds — the op's within_bound
 # audit and test_mining.py's error study use this same constant.

@@ -23,14 +23,6 @@ from pyspark.sql import DataFrame
 
 from kinesis_to_firehose_spark.plans.explain import physical_plan
 
-# ops that spin up streaming pipelines; no static batch plan to digest
-_STREAMING = {
-    "firehose_sink",
-    "checkpoint_resume",
-    "kinesis_source",
-    "kinesis_replay_source",
-}
-
 _COUNTERS = {
     "exchanges": "Exchange",
     "broadcast_exchanges": "BroadcastExchange",
@@ -54,11 +46,13 @@ def plan_digest(df: DataFrame) -> dict[str, int]:
 
 
 def digest_all(spark, sf_dir: str) -> dict[str, dict[str, int]]:
-    from kinesis_to_firehose_spark.registry import all_ops
+    from kinesis_to_firehose_spark.registry import all_ops, streaming_op_names
 
+    # streaming ops have no static batch plan to digest
+    streaming = streaming_op_names()
     out: dict[str, dict[str, int]] = {}
     for name, op in sorted(all_ops().items()):
-        if name in _STREAMING:
+        if name in streaming:
             continue
         out[name] = plan_digest(op.fn(spark, sf_dir))
     return out

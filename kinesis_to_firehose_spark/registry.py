@@ -93,3 +93,16 @@ def all_ops() -> dict[str, Op]:
     )
 
     return dict(_REGISTRY)
+
+
+def streaming_op_names() -> frozenset[str]:
+    """Ops that start a Structured Streaming query (those registered in
+    operators/streaming_ops.py): no static batch plan, and a run
+    measures protocol correctness, not query throughput."""
+    from kinesis_to_firehose_spark.operators import streaming_ops
+
+    return frozenset(
+        name
+        for name, op in all_ops().items()
+        if op.fn.__module__ == streaming_ops.__name__
+    )

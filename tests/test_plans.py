@@ -9,10 +9,11 @@ from kinesis_to_firehose_spark.plans.explain import (
     read_schemas,
     wholestage_codegen_ids,
 )
-from kinesis_to_firehose_spark.registry import all_ops
+from kinesis_to_firehose_spark.registry import all_ops, streaming_op_names
 
 SF = "/root/testdata/sf0.01"
 OPS = all_ops()
+STREAMING = streaming_op_names()  # no static batch plan
 
 
 def test_q6_filters_pushed_to_scan(spark):
@@ -194,12 +195,6 @@ def test_no_accidental_cartesian_or_nested_loop(spark):
         "ann_int8_topk",         # 5 query vectors × candidates
         "benford_audit",         # 1-row grand-total scalar cross
         "neyman_allocation",     # 1-row weight-total / remainder crosses
-    }
-    STREAMING = {
-        "firehose_sink",
-        "checkpoint_resume",
-        "kinesis_source",
-        "kinesis_replay_source",
     }
     bad = []
     for name, op in sorted(OPS.items()):
@@ -490,12 +485,6 @@ def test_every_unpartitioned_window_is_allowlisted(spark):
         "session_paths",         # ≤|event_type|³ distinct 3-step paths
         "skyline_pareto",        # ≤|p_size| DOMAIN rows (op docstring)
         "tokenize_to_ids",       # vocab-bounded id assignment rank
-    }
-    STREAMING = {
-        "firehose_sink",
-        "checkpoint_resume",
-        "kinesis_source",
-        "kinesis_replay_source",
     }
     offenders = {}
     for name, op in sorted(OPS.items()):

@@ -1159,6 +1159,11 @@ def test_config_from_env_reference_semantics():
         REQUIRED_ENV,
         config_from_env,
     )
+    from kinesis_to_firehose_spark.streaming.firehose import (
+        BATCH_COUNT,
+        BATCH_INTERVAL_S,
+        BATCH_SIZE,
+    )
 
     full = {
         "KINESIS_AWS_REGION": "us-west-2",
@@ -1176,8 +1181,9 @@ def test_config_from_env_reference_semantics():
     assert cfg.failed_logs_file == "/tmp/failed.2026-08-14T12:00:05.log"
     assert cfg.source.read_rate_limit == 300
     assert cfg.source.initial_position == "TRIM_HORIZON"
-    assert cfg.batch_count == 500 and cfg.batch_interval_s == 10.0
-    assert cfg.batch_size == 4 * 1024 * 1024
+    # the batch bounds are the reference constants, not env config
+    assert BATCH_COUNT == 500 and BATCH_INTERVAL_S == 10.0
+    assert BATCH_SIZE == 4 * 1024 * 1024
     opts = cfg.source.reader_options()
     assert opts["streamName"] == "logs"
     assert opts["startingPosition"] == "trim_horizon"

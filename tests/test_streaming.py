@@ -23,6 +23,7 @@ from kinesis_to_firehose_spark.streaming.firehose import (
 from kinesis_to_firehose_spark.streaming.pipeline import (
     drop_stats_stream,
     run_pipeline,
+    run_pipeline_replay,
     write_source_slice,
 )
 
@@ -102,10 +103,44 @@ def test_local_dir_transport_idempotent_epoch(tmp_path):
 # ---------------- end-to-end: stream → decode → deliver ----------------
 
 
-@pytest.fixture(scope="module")
-def source_dir(tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("events_src"))
-    return d
+def _replay_payloads(spark, event_type=None):
+    """(partition key, JSON payload) pairs for the sf0.001 events, the
+    payload shape the kinesis_replay pipeline decodes; `event_type`
+    overrides every record's stream tag."""
+    from pyspark.sql import functions as F
+
+    from kinesis_to_firehose_spark.sources.tables import load
+
+    ev = load(spark, "events", SF)
+    if event_type is not None:
+        ev = ev.withColumn("event_type", F.lit(event_type))
+    data = F.to_json(
+        F.struct("event_id", "ts", "user_id", "event_type", "value", "props")
+    )
+    return [
+        (str(r["user_id"]), r["data"])
+        for r in ev.select("user_id", data.alias("data"))
+        .orderBy("event_id")
+        .collect()
+    ]
+
+
+def _write_source(spark, tmp_path, source: str) -> str:
+    """Stage the sf0.001 events as forwarder input: parquet slices for
+    the file source, shard logs for the kinesis_replay source."""
+    src = str(tmp_path / "src")
+    if source == "file":
+        write_source_slice(spark, SF, src, n_files=3)
+    else:
+        from kinesis_to_firehose_spark.sources.kinesis_datasource import (
+            write_replay_slices,
+        )
+
+        write_replay_slices(src, _replay_payloads(spark), n_shards=4)
+    return src
+
+
+RUN = {"file": run_pipeline, "replay": run_pipeline_replay}
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -254,15 +289,12 @@ def test_batch_interval_flushes_open_batch():
     assert calls == [("s", 2), ("s", 2)]
 
 
-def test_run_pipeline_with_processing_time_trigger(spark, tmp_path):
-    """Trigger wiring: the production cadence must still drain cleanly
-    under processAllAvailable (short interval keeps the test fast)."""
-    src = str(tmp_path / "src")
+def _assert_trigger_drains(spark, tmp_path, source: str) -> None:
+    src = _write_source(spark, tmp_path, source)
     out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    write_source_slice(spark, SF, src, n_files=2)
-    q = run_pipeline(
-        spark, src, out, ckpt, trigger_processing_time="1 seconds"
+    q = RUN[source](
+        spark, src, out, str(tmp_path / "ckpt"),
+        trigger_processing_time="1 seconds",
     )
     q.processAllAvailable()
     q.stop()
@@ -274,6 +306,18 @@ def test_run_pipeline_with_processing_time_trigger(spark, tmp_path):
         for s in ["click", "view", "purchase", "signup", "error"]
     )
     assert delivered == n_expected
+
+
+def test_run_pipeline_with_processing_time_trigger(spark, tmp_path):
+    """Trigger wiring: the production cadence must still drain cleanly
+    under processAllAvailable (short interval keeps the test fast)."""
+    _assert_trigger_drains(spark, tmp_path, "file")
+
+
+def test_run_pipeline_replay_with_processing_time_trigger(spark, tmp_path):
+    """The replay forwarder takes the same trigger as the file one, so
+    `consume --replay` runs on the production cadence too."""
+    _assert_trigger_drains(spark, tmp_path, "replay")
 
 
 def test_sink_task_ids_deterministic_from_partition(spark, tmp_path):
@@ -350,292 +394,6 @@ def test_kinesis_reader_options_wiring(spark):
         cfg.reader(spark)
 
 
-def test_session_window_stream_matches_batch(spark, tmp_path):
-    """Streaming session_window == batch session_window_agg on the same
-    slice. Append mode only emits sessions the watermark has passed, so
-    after draining the real data we append a far-future sentinel event
-    to push the watermark beyond every real session's close."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        session_window_stream,
-    )
-
-    src = str(tmp_path / "src")
-    write_source_slice(spark, SF, src, n_files=2)
-
-    agg = session_window_stream(spark, src)
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_out")
-        .start()
-    )
-    q.processAllAvailable()
-    # sentinel: one event far past every real session close
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    far = load(spark, "events", SF).agg(
-        F.max("ts").alias("m")
-    ).collect()[0]["m"]
-    import datetime
-
-    sentinel_ts = far + datetime.timedelta(days=30)
-    spark.createDataFrame(
-        [(10**9, sentinel_ts, -1, "click", 0.0, "{}")],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    ).coalesce(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    got = {
-        (r["user_id"], r["window_start"], r["window_end"], r["n_events"], r["session_value"])
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-        if r["user_id"] != -1
-    }
-    want = {
-        (r["user_id"], r["window_start"], r["window_end"], r["n_events"], r["session_value"])
-        for r in all_ops()["session_window_agg"].fn(spark, SF).collect()
-    }
-    assert got == want
-
-
-def test_dedup_stream_drops_redelivered_records(spark, tmp_path):
-    """At-least-once redelivery (the same slice lands twice, as Kinesis
-    does on shard handover) must come out exactly once."""
-    import shutil
-
-    src = str(tmp_path / "src")
-    write_source_slice(spark, SF, src, n_files=2)
-    # redeliver: copy each source file under a new name
-    for name in list(os.listdir(src)):
-        if name.endswith(".parquet"):
-            shutil.copy(
-                os.path.join(src, name), os.path.join(src, f"redeliver-{name}")
-            )
-
-    from kinesis_to_firehose_spark.streaming.pipeline import dedup_stream
-
-    q = (
-        dedup_stream(spark, src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql(
-        "SELECT count(*) AS n, count(DISTINCT event_id) AS nd FROM dedup_out"
-    ).collect()[0]
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    want = load(spark, "events", SF).count()
-    assert got["n"] == want
-    assert got["nd"] == want
-
-
-def test_attribution_stream_join_matches_batch(spark, tmp_path):
-    """Watermarked stream-stream click→purchase join == the same join
-    on the static table (append mode emits once the watermark passes;
-    processAllAvailable + a final empty batch flushes all state on the
-    file simulator)."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.sources.tables import load
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        attribution_stream_join,
-    )
-
-    src = str(tmp_path / "src")
-    write_source_slice(spark, SF, src, n_files=2)
-    q = (
-        attribution_stream_join(spark, src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("attribution_out")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql(
-        "SELECT count(*) AS n, count(DISTINCT purchase_id) AS np "
-        "FROM attribution_out"
-    ).collect()[0]
-
-    e = load(spark, "events", SF)
-    clicks = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    batch = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 2 hours")),
-    )
-    want = batch.count()
-    want_p = batch.select("purchase_id").distinct().count()
-    # inner stream-stream joins emit on match (the watermark only
-    # bounds buffered state), so the stream output equals the batch
-    # join exactly once the source is drained.
-    assert got["n"] == want
-    assert got["np"] == want_p
-
-
-def test_attribution_stream_outer_matches_batch(spark, tmp_path):
-    """LEFT OUTER stream-stream join parity: purchases with no
-    qualifying click must surface with NULL click columns — but only
-    after the watermark proves no match can arrive. A far-future
-    advancer event on each side pushes the watermark past every real
-    purchase's join window so the drained stream equals the batch
-    left join exactly."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.sources.tables import load
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        EVENT_SCHEMA,
-        attribution_stream_outer,
-    )
-
-    src = str(tmp_path / "src")
-    write_source_slice(spark, SF, src, n_files=2)
-
-    q = (
-        attribution_stream_outer(spark, src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .format("memory")
-        .queryName("attr_outer_out")
-        .start()
-    )
-    q.processAllAvailable()
-
-    # watermark advancer: one click + one purchase far past the data's
-    # range under a sentinel user no real event can join with
-    import datetime
-
-    far = datetime.datetime(2030, 1, 1)
-    spark.createDataFrame(
-        [
-            (10**9, far, -1, "click", 0.0, "{}"),
-            (10**9 + 1, far, -1, "purchase", 0.0, "{}"),
-        ],
-        EVENT_SCHEMA,
-    ).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.sql(
-        "SELECT count(*) AS n, "
-        "count(*) FILTER (WHERE click_id IS NULL) AS unmatched "
-        "FROM attr_outer_out WHERE p_user >= 0"
-    ).collect()[0]
-
-    e = load(spark, "events", SF)
-    clicks = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    batch = purchases.join(
-        clicks,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr("INTERVAL 2 hours")
-        ),
-        "left_outer",
-    )
-    assert got["n"] == batch.count()
-    assert (
-        got["unmatched"]
-        == batch.filter(F.col("click_id").isNull()).count()
-    )
-    assert got["unmatched"] > 0  # the corpus does contain orphans
-
-
-def test_latest_per_key_stream_matches_batch(spark, tmp_path):
-    """CDC snapshot parity: drain the simulated change feed one file
-    per micro-batch through the stateful upsert op; replaying every
-    emitted update in batch order must land on exactly the batch
-    `latest_per_key` compaction (same recency order, same tie-break)."""
-    import shutil
-
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        latest_per_key_stream,
-    )
-
-    src = str(tmp_path / "src")
-    write_source_slice(spark, SF, src, n_files=3)
-
-    emitted: list[tuple[int, list]] = []
-
-    def sink(df, batch_id):
-        emitted.append((batch_id, df.collect()))
-
-    # write_source_slice splits randomly, so each file spans the whole
-    # event-time range — the watermark must cover that disorder or
-    # later slices are dropped as late (the historical-replay knob)
-    q = (
-        latest_per_key_stream(
-            spark, src, watermark="40 days", max_files_per_trigger=1
-        )
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .start()
-    )
-    q.processAllAvailable()
-    n_batches_first_drain = len(emitted)
-
-    # cross-batch state must actually be exercised (1 file per trigger)
-    assert n_batches_first_drain >= 3
-
-    # at-least-once redelivery: the same slice lands again; a replayed
-    # record compares equal-not-newer, so the snapshot must not flap
-    for name in list(os.listdir(src)):
-        if name.endswith(".parquet"):
-            shutil.copy(
-                os.path.join(src, name), os.path.join(src, f"redeliver-{name}")
-            )
-    q.processAllAvailable()
-    q.stop()
-    replay_updates = [
-        r for _, rows in emitted[n_batches_first_drain:] for r in rows
-    ]
-    assert replay_updates == []
-
-    snapshot = {}
-    for _, rows in sorted(emitted, key=lambda t: t[0]):
-        for r in rows:
-            snapshot[r["user_id"]] = (
-                r["event_id"],
-                r["ts"],
-                r["event_type"],
-                round(r["value"], 2),
-            )
-    want = {
-        r["user_id"]: (r["event_id"], r["ts"], r["event_type"], r["value"])
-        for r in all_ops()["latest_per_key"].fn(spark, SF).collect()
-    }
-    assert snapshot == want
-
-
 # ---------------- hypothesis: protocol invariants (pure logic) ---------
 
 from hypothesis import given, settings
@@ -691,233 +449,6 @@ def test_send_batch_eventual_delivery_or_dead_letter(fail_counts):
             if t.fail_times.get(r, 0) == 0:
                 delivered.add(r)
     assert delivered >= set(batch) - expected_dead
-
-
-@pytest.mark.parametrize("layout", ["dirs", "manifest"])
-def test_snapshot_sink_maintains_point_lookup_store(spark, tmp_path, layout):
-    """Drain the change feed through snapshot_sink: the persisted
-    store must equal the batch latest_per_key compaction and serve
-    point lookups from the written layout — for both store layouts."""
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.sources.bucketed import (
-        snapshot_lookup,
-        snapshot_read,
-    )
-    from kinesis_to_firehose_spark.streaming.pipeline import snapshot_sink
-
-    src = str(tmp_path / "src")
-    snap = str(tmp_path / "snap")
-    write_source_slice(spark, SF, src, n_files=3)
-
-    q = snapshot_sink(
-        spark,
-        src,
-        snap,
-        str(tmp_path / "ckpt"),
-        watermark="40 days",
-        max_files_per_trigger=1,
-        layout=layout,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    stored = {
-        r["user_id"]: (r["event_id"], round(r["value"], 2))
-        for r in snapshot_read(spark, snap).collect()
-    }
-    want = {
-        r["user_id"]: (r["event_id"], r["value"])
-        for r in all_ops()["latest_per_key"].fn(spark, SF).collect()
-    }
-    assert stored == want
-
-    some = sorted(want)[:3]
-    looked = snapshot_lookup(spark, snap, "user_id", some)
-    assert sorted(r["user_id"] for r in looked.collect()) == some
-
-
-def test_ewma_stream_matches_batch_bit_exact(spark, tmp_path):
-    """Streaming EWMA parity: drain a time-ordered feed one slice per
-    micro-batch through the stateful lag buffer; every per-event EWMA
-    must equal the batch window op BIT-EXACTLY (same left-assoc fold),
-    with cross-batch continuity actually exercised (≥3 batches)."""
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        ewma_stream,
-        write_time_sliced_source,
-    )
-
-    src = str(tmp_path / "src")
-    write_time_sliced_source(spark, SF, src, n_slices=3)
-
-    emitted = []
-
-    def sink(df, batch_id):
-        emitted.append((batch_id, df.collect()))
-
-    q = (
-        ewma_stream(spark, src, max_files_per_trigger=1)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert len(emitted) >= 3
-
-    stream_rows = [r for _, batch in emitted for r in batch]
-    batch_out = all_ops()["ewma_smooth"].fn(spark, SF).collect()
-    assert len(stream_rows) == len(batch_out)
-
-    # round the stream's raw doubles with the SAME Spark ROUND the
-    # batch op applies, then compare per event
-    rounded = {
-        r["event_id"]: r["ewma"]
-        for r in spark.createDataFrame(
-            [(x["event_id"], x["ewma_raw"]) for x in stream_rows],
-            "event_id long, ewma_raw double",
-        )
-        .selectExpr("event_id", "round(ewma_raw, 6) AS ewma")
-        .collect()
-    }
-    mismatches = [
-        (r["event_id"], rounded[r["event_id"]], r["ewma"])
-        for r in batch_out
-        if rounded[r["event_id"]] != r["ewma"]
-    ]
-    assert not mismatches, mismatches[:5]
-
-
-def test_topk_stream_closed_windows_match_batch(spark, tmp_path):
-    """Windowed heavy-hitter parity: append-mode window counts rank to
-    exactly the batch hourly_top_users rows for every window the
-    watermark closed (the still-open tail windows are excluded from
-    the comparison on both sides)."""
-    from kinesis_to_firehose_spark.operators.analytics import (
-        HOURLY_TOPK,
-    )
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        rank_topk_batch,
-        topk_stream,
-        write_time_sliced_source,
-    )
-
-    src = str(tmp_path / "src")
-    write_time_sliced_source(spark, SF, src, n_slices=4)
-
-    closed = []
-
-    def sink(df, batch_id):
-        closed.extend(rank_topk_batch(df, HOURLY_TOPK).collect())
-
-    q = (
-        topk_stream(spark, src, watermark="1 hour")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert closed, "no windows closed — watermark never advanced"
-
-    stream_rows = {
-        (r["hour"], r["user_id"]): (r["n"], r["rank"]) for r in closed
-    }
-    closed_hours = {h for h, _ in stream_rows}
-    batch_rows = {
-        (r["hour"], r["user_id"]): (r["n"], r["rank"])
-        for r in all_ops()["hourly_top_users"].fn(spark, SF).collect()
-        if r["hour"] in closed_hours
-    }
-    assert stream_rows == batch_rows
-    # the comparison must cover most of the feed, not a sliver
-    all_hours = {
-        r["hour"]
-        for r in all_ops()["hourly_top_users"].fn(spark, SF).collect()
-    }
-    assert len(closed_hours) >= len(all_hours) - 2
-
-
-def test_stats_snapshot_sink_versioned_export(spark, tmp_path):
-    """Streaming aggregate export: the drop-stats feed maintained as a
-    versioned manifest-layout snapshot table. After the drain the
-    store equals the batch pre-aggregate; each trigger's commit is
-    retained for time-travel (an earlier version shows strictly less
-    dropped mass); retention caps the version window."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.sources.bucketed import (
-        _read_meta,
-        snapshot_read,
-    )
-    from kinesis_to_firehose_spark.sources.tables import load
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        stats_snapshot_sink,
-        write_time_sliced_source,
-    )
-
-    src = str(tmp_path / "src")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    write_time_sliced_source(spark, SF, src, n_slices=3)
-
-    q = stats_snapshot_sink(spark, src, store, ckpt, keep_versions=2)
-    q.processAllAvailable()
-    q.stop()
-
-    meta = _read_meta(store)
-    assert meta["layout"] == "manifest"
-    assert meta["version"] >= 2  # multiple epochs committed
-
-    # final store == batch pre-aggregate (same fallback semantics)
-    dropped = load(spark, "events", SF).filter(
-        ~F.col("event_type").isin("click", "view", "purchase", "signup")
-    )
-    app = F.coalesce(
-        F.when(F.col("value") >= 5, F.col("event_type")), F.lit("_UNKNOWN_")
-    )
-    level = F.coalesce(
-        F.when(F.col("value") < 50, F.lit("warning")).when(
-            F.col("value") < 90, F.lit("critical")
-        ),
-        F.lit("debug"),
-    )
-    want = sorted(
-        tuple(r)
-        for r in dropped.withColumn("level", level)
-        .withColumn("container_app", app)
-        .groupBy(
-            F.window("ts", "1 minute")["start"].alias("minute_start"),
-            "container_app",
-            "level",
-        )
-        .agg(F.count("*").alias("n_dropped"))
-        .collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in snapshot_read(spark, store)
-        .select("minute_start", "container_app", "level", "n_dropped")
-        .collect()
-    )
-    assert got == want
-
-    # time travel: the previous epoch's table is readable and carries
-    # strictly less dropped mass than the final one
-    prev = (
-        snapshot_read(spark, store, version=meta["version"] - 1)
-        .agg(F.sum("n_dropped"))
-        .first()[0]
-    )
-    final = sum(r[3] for r in got)
-    assert prev is not None and prev < final
-
-    # retention: keep_versions=2 ⇒ version - 2 is out of the window
-    with pytest.raises(Exception):
-        snapshot_read(spark, store, version=meta["version"] - 2).collect()
 
 
 def test_dedup_ingest_stream_probes_and_appends(spark, tmp_path):
@@ -1005,151 +536,7 @@ def test_dedup_ingest_stream_probes_and_appends(spark, tmp_path):
     assert replay == got2
 
 
-def test_cusum_stream_matches_batch(spark, tmp_path):
-    """Streaming CUSUM with the batch op's whole-series stats as the
-    reference baseline must reproduce cusum_changepoint row-for-row
-    (exact integer state carried across micro-batches; the emitted
-    raw statistic is the same IEEE division, rounded here at the
-    query edge like the batch op)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.sources.tables import load
-    from kinesis_to_firehose_spark.streaming.pipeline import cusum_stream
-
-    sf = "/root/testdata/sf0.01"
-    e = load(spark, "events", sf)
-    daily = (
-        e.groupBy(
-            "event_type",
-            F.col("ts").cast("date").cast("string").alias("day"),
-        )
-        .agg(F.count("*").cast("long").alias("x"))
-        .orderBy("day")
-    )
-    stats = {
-        r["event_type"]: (r["n"], r["sx"])
-        for r in daily.groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("x").alias("sx"))
-        .collect()
-    }
-    rows = daily.collect()
-    days = sorted({r["day"] for r in rows})
-    # three chronological slices, one file per trigger
-    src = tmp_path / "daily_src"
-    src.mkdir()
-    cut1, cut2 = days[len(days) // 3], days[2 * len(days) // 3]
-    slices = [
-        [r for r in rows if r["day"] <= cut1],
-        [r for r in rows if cut1 < r["day"] <= cut2],
-        [r for r in rows if r["day"] > cut2],
-    ]
-    import time
-
-    for i, sl in enumerate(slices):
-        pd.DataFrame(
-            {
-                "event_type": [r["event_type"] for r in sl],
-                "day": [r["day"] for r in sl],
-                "x": [r["x"] for r in sl],
-            }
-        ).to_parquet(str(src / f"slice-{i}.parquet"))
-        time.sleep(0.05)  # strictly increasing mtimes → ordered replay
-
-    emitted = []
-
-    def sink(df, batch_id):
-        emitted.append((batch_id, df.collect()))
-
-    q = (
-        cusum_stream(spark, str(src), stats)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert len([b for b, r in emitted if r]) >= 3  # state crossed batches
-
-    got_rows = [r for _, rs in emitted for r in rs]
-    got_df = spark.createDataFrame(got_rows).select(
-        "event_type",
-        "day",
-        F.round("cusum_raw", 6).alias("cusum_stat"),
-        F.col("drifting").cast("int").alias("drifting"),
-    )
-    got = sorted(tuple(r) for r in got_df.collect())
-    batch = sorted(
-        (r["event_type"], r["day"], r["cusum_stat"], r["drifting"])
-        for r in all_ops()["cusum_changepoint"].fn(spark, sf).collect()
-    )
-    assert got == batch
-
-
-def test_hll_stream_weekly_merge_matches_batch(spark, tmp_path):
-    """Streaming HLL maintenance: the state-store sketches (latest
-    update per (type, day) key), merged upward with hll_union_agg,
-    must equal hll_partition_merge's batch weekly estimates exactly
-    (same sketch algorithm, same lgK ⇒ identical estimates)."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.streaming.pipeline import hll_stream
-
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "src")
-    write_source_slice(spark, sf, src, n_files=3)
-
-    latest = {}
-
-    def sink(df, batch_id):
-        for r in df.collect():
-            latest[(r["event_type"], r["week"], r["day"])] = r["sk"]
-
-    q = (
-        hll_stream(spark, src, max_files_per_trigger=1)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .foreachBatch(sink)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert latest
-
-    sk_df = spark.createDataFrame(
-        [(et, wk, d, bytes(sk)) for (et, wk, d), sk in latest.items()],
-        "event_type string, week timestamp, day date, sk binary",
-    )
-    merged = {
-        (r["event_type"], r["week"]): (r["n_days"], r["approx_users"])
-        for r in sk_df.groupBy("event_type", "week")
-        .agg(
-            F.count("*").cast("bigint").alias("n_days"),
-            F.expr("hll_sketch_estimate(hll_union_agg(sk))")
-            .cast("bigint")
-            .alias("approx_users"),
-        )
-        .collect()
-    }
-    from kinesis_to_firehose_spark.operators.mining import (
-        hll_partition_merge_raw,
-    )
-
-    batch = {
-        (r["event_type"], r["week"]): (r["n_days"], r["approx_users"])
-        for r in hll_partition_merge_raw(spark, sf).collect()
-    }
-    assert merged == batch
-
-
-def test_pipeline_observed_metrics(spark, tmp_path):
-    """The delivery stream publishes per-micro-batch record/byte
-    counts through Spark's observe() channel: summed over all
-    progress events they equal the source record count and the exact
-    JSONL byte volume (computed in-plan — no second scan)."""
+def _assert_observed_metrics(spark, tmp_path, source: str) -> None:
     from pyspark.sql import functions as F
 
     from kinesis_to_firehose_spark.functions.decode import (
@@ -1157,12 +544,9 @@ def test_pipeline_observed_metrics(spark, tmp_path):
         jsonl_line,
     )
     from kinesis_to_firehose_spark.sources.tables import load
-    from kinesis_to_firehose_spark.streaming.pipeline import run_pipeline
 
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "src")
-    write_source_slice(spark, sf, src, n_files=3)
-    q = run_pipeline(
+    src = _write_source(spark, tmp_path, source)
+    q = RUN[source](
         spark,
         src,
         str(tmp_path / "out"),
@@ -1180,7 +564,7 @@ def test_pipeline_observed_metrics(spark, tmp_path):
     assert obs, "no observed metrics published"
     got_records = sum(o["records"] for o in obs)
     got_bytes = sum(o["line_bytes"] for o in obs)
-    d = decode_enhance(load(spark, "events", sf))
+    d = decode_enhance(load(spark, "events", SF))
     want_records = d.count()
     want_bytes = d.select(
         F.sum(F.length(jsonl_line(d)) + 1).alias("b")
@@ -1189,75 +573,17 @@ def test_pipeline_observed_metrics(spark, tmp_path):
     assert got_bytes == want_bytes
 
 
-def test_funnel_stream_matches_batch_levels(spark, tmp_path):
-    """Streaming funnel state (per-user t1/t2/t3 across micro-batches)
-    must reproduce the batch window_funnel_levels histogram exactly
-    under event-time-ordered replay: latest emitted level per user →
-    level counts == the batch op on the same events."""
-    import time
+def test_pipeline_observed_metrics(spark, tmp_path):
+    """The delivery stream publishes per-micro-batch record/byte
+    counts through Spark's observe() channel: summed over all
+    progress events they equal the source record count and the exact
+    JSONL byte volume (computed in-plan — no second scan)."""
+    _assert_observed_metrics(spark, tmp_path, "file")
 
-    import pandas as pd
-    from pyspark.sql import functions as F
 
-    from kinesis_to_firehose_spark.operators.analytics import (
-        window_funnel_levels,
-    )
-    from kinesis_to_firehose_spark.sources.tables import load
-    from kinesis_to_firehose_spark.streaming.pipeline import funnel_stream
-
-    sf = "/root/testdata/sf0.01"
-    ev = (
-        load(spark, "events", sf)
-        .select("user_id", "ts", "event_type")
-        .orderBy("ts")
-        .collect()
-    )
-    src = tmp_path / "funnel_src"
-    src.mkdir()
-    n = len(ev)
-    cuts = [0, n // 3, 2 * n // 3, n]
-    for i in range(3):
-        sl = ev[cuts[i] : cuts[i + 1]]
-        pd.DataFrame(
-            {
-                "user_id": [r["user_id"] for r in sl],
-                "ts": [r["ts"] for r in sl],
-                "event_type": [r["event_type"] for r in sl],
-            }
-        ).to_parquet(
-            str(src / f"slice-{i}.parquet"),
-            coerce_timestamps="us",  # Spark reads µs TIMESTAMP, not ns INT64
-            allow_truncated_timestamps=True,
-        )
-        time.sleep(0.05)  # increasing mtimes → event-time-ordered replay
-
-    latest: dict[int, int] = {}
-
-    def sink(df, batch_id):
-        for r in df.collect():
-            latest[r["user_id"]] = r["level"]
-
-    q = (
-        funnel_stream(spark, str(src))
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
-    got: dict[int, int] = {}
-    for lv in latest.values():
-        got[lv] = got.get(lv, 0) + 1
-    want = {
-        r["level"]: r["n_users"]
-        for r in window_funnel_levels(spark, sf).collect()
-    }
-    assert got == want
+def test_pipeline_replay_observed_metrics(spark, tmp_path):
+    """The replay forwarder publishes the same delivery_metrics."""
+    _assert_observed_metrics(spark, tmp_path, "replay")
 
 
 def test_boto3_transport_maps_put_record_batch_contract():
@@ -1571,21 +897,12 @@ def test_sdk_retry_budget_matches_reference_withmaxretries():
     assert Boto3FirehoseTransport()._max_attempts == 10
 
 
-def test_cli_consume_runs_forwarder_end_to_end(spark, tmp_path):
-    """`python -m kinesis_to_firehose_spark consume --once` drives the
-    full forwarder (stream source -> decode/enhance -> Firehose sink)
-    and delivers every record — the reference binary's run mode as a
-    CLI surface (Dockerfile CMD / launch yml)."""
+def _assert_cli_consume_delivers(spark, tmp_path, source: str) -> None:
     import glob
 
     import kinesis_to_firehose_spark.__main__ as M
-    from kinesis_to_firehose_spark.streaming.pipeline import (
-        write_source_slice,
-    )
 
-    sf = "/root/testdata/sf0.001"
-    src = str(tmp_path / "src")
-    write_source_slice(spark, sf, src, n_files=2)
+    src = _write_source(spark, tmp_path, source)
     rc = M.main(
         [
             "consume",
@@ -1595,12 +912,27 @@ def test_cli_consume_runs_forwarder_end_to_end(spark, tmp_path):
             "--dead-letter-dir", str(tmp_path / "dl"),
             "--once",
             "--cpus", "4",
+            *(["--replay"] if source == "replay" else []),
         ]
     )
     assert rc == 0
     files = glob.glob(f"{tmp_path}/out/**/*.jsonl", recursive=True)
     n = sum(sum(1 for _ in open(f, "rb")) for f in files)
     assert n == 1000
+
+
+def test_cli_consume_runs_forwarder_end_to_end(spark, tmp_path):
+    """`python -m kinesis_to_firehose_spark consume --once` drives the
+    full forwarder (stream source -> decode/enhance -> Firehose sink)
+    and delivers every record — the reference binary's run mode as a
+    CLI surface (Dockerfile CMD / launch yml)."""
+    _assert_cli_consume_delivers(spark, tmp_path, "file")
+
+
+def test_cli_consume_replay_runs_forwarder_end_to_end(spark, tmp_path):
+    """`consume --replay --once` drives the same forwarder over
+    kinesis_replay shard logs and delivers every record."""
+    _assert_cli_consume_delivers(spark, tmp_path, "replay")
 
 
 def test_chaos_soak_kill_resume_mid_delivery(spark, tmp_path):
@@ -1723,28 +1055,6 @@ def test_chaos_soak_kill_resume_mid_delivery(spark, tmp_path):
         )
         assert {g["event_id"] for g in got} == ids
     assert not os.path.isdir(dl) or not os.listdir(dl), "dead letters"
-
-
-def _replay_payloads(spark, event_type=None):
-    """(partition key, JSON payload) pairs for the sf0.001 events, the
-    payload shape the kinesis_replay pipeline decodes; `event_type`
-    overrides every record's stream tag."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    ev = load(spark, "events", SF)
-    if event_type is not None:
-        ev = ev.withColumn("event_type", F.lit(event_type))
-    data = F.to_json(
-        F.struct("event_id", "ts", "user_id", "event_type", "value", "props")
-    )
-    return [
-        (str(r["user_id"]), r["data"])
-        for r in ev.select("user_id", data.alias("data"))
-        .orderBy("event_id")
-        .collect()
-    ]
 
 
 def _delivered_ids(out: str) -> list[int]:
