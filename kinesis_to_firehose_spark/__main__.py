@@ -50,8 +50,9 @@ def main(argv: list[str] | None = None) -> int:
     conp.add_argument(
         "--aws",
         action="store_true",
-        help="deliver through boto3 PutRecordBatch (needs AWS "
-        "credentials + FIREHOSE_AWS_REGION/FIREHOSE_STREAM_NAME env; "
+        help="deliver every record to FIREHOSE_STREAM_NAME through "
+        "boto3 PutRecordBatch (needs AWS credentials and the "
+        "reference's env variables, streaming/config.py REQUIRED_ENV; "
         "default is the local-directory Firehose simulator)",
     )
     conp.add_argument(
@@ -105,8 +106,9 @@ def _consume(args) -> int:
     decode/enhance → Firehose-protocol sink with checkpoint/resume.
     Local simulator transports by default; --aws swaps in the boto3
     PutRecordBatch transport behind the identical seam — nothing
-    downstream changes."""
-    from kinesis_to_firehose_spark.session import get_spark
+    downstream changes. Its region, endpoint and delivery stream come
+    from the reference's env surface, resolved before Spark starts so
+    a missing variable fails at once (main.go:17-23)."""
     from kinesis_to_firehose_spark.streaming.pipeline import (
         PRODUCTION_TRIGGER,
         run_pipeline,
@@ -115,20 +117,18 @@ def _consume(args) -> int:
 
     transport_factory = None
     if args.aws:
-        import os
-
+        from kinesis_to_firehose_spark.streaming.config import config_from_env
         from kinesis_to_firehose_spark.streaming.firehose import (
             Boto3FirehoseTransport,
             RetryingTransport,
         )
 
-        region = os.environ.get("FIREHOSE_AWS_REGION")
-        # main.go:59 — the resolved FIREHOSE_AWS_ENDPOINT must reach
-        # the client (round-6 verdict residual 2)
-        endpoint = os.environ.get("FIREHOSE_AWS_ENDPOINT") or None
+        cfg = config_from_env()
         transport_factory = lambda epoch: RetryingTransport(  # noqa: E731
-            Boto3FirehoseTransport(region_name=region, endpoint_url=endpoint)
+            Boto3FirehoseTransport.from_config(cfg)
         )
+    from kinesis_to_firehose_spark.session import get_spark
+
     spark = get_spark("kinesis-to-firehose-consume", cpus=args.cpus)
     run = run_pipeline_replay if args.replay else run_pipeline
     q = run(

@@ -44,17 +44,6 @@ def _try_import(name: str):
         return None
 
 
-def codec_status() -> dict[str, str]:
-    """Which decode path each kind would take on THIS interpreter:
-    library name, 'builtin-<format>' for the stdlib fallback, or
-    'stub'. Diagnostic only — the kernels re-probe on the workers."""
-    return {
-        "image": "PIL" if _try_import("PIL.Image") else "builtin-ppm",
-        "audio": "soundfile" if _try_import("soundfile") else "builtin-wav",
-        "video": "av" if _try_import("av") else "stub",
-    }
-
-
 # ---------------------------------------------------------------- image
 
 

@@ -2621,9 +2621,7 @@ def agg_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in BOTH dimensions, and a 2-D box predicate prunes row groups on
 # both min/max ranges at once (a single-column sort can only prune
 # one). Here: 8 bucket bits of user_id × 5 bits of day-of-month over
-# events. Pure integer arithmetic, identical on both engines; the
-# write-side utility that uses it is sources/layout.py (pruning win
-# asserted in pytest).
+# events. Pure integer arithmetic, identical on both engines.
 # --------------------------------------------------------------------------
 _Z_SPARK = (
     "(shiftright(ub, 0) & 1) * 1 + (shiftright(ub, 1) & 1) * 4 + "

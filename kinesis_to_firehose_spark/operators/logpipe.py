@@ -385,24 +385,32 @@ def parse_syslog_lines(lines: DataFrame) -> DataFrame:
 
     r13 (guide §1.2 per-task work): seven per-group regexp_extract
     calls ran the matcher seven times per row. One anchored
-    regexp_replace now emits all seven captures \\x01-joined (the
-    payload is synthesized from [a-z]+ names and digits, so the
-    separator cannot collide) and one split recovers them. The rlike
-    guard preserves regexp_extract's exact no-match ('' per group)
-    and NULL-input (NULL per group) semantics — asserted by
+    regexp_replace now emits all seven captures \\x01-joined and one
+    split recovers them. The separator can collide: the timestamp and
+    hostname (\\S+) and the payload (.*) may all contain \\x01, so a
+    line that contains \\x01 anywhere takes the seven regexp_extract
+    calls instead (exact for any input; lines without control bytes
+    stay on the one-regex path). The rlike guard preserves
+    regexp_extract's exact no-match ('' per group) and NULL-input
+    (NULL per group) semantics — asserted by
     tests/test_sources_state.py::test_syslog_parse_survives_garbage_lines."""
     rx = _SYSLOG_RE
     sep = "\x01"
     raw = F.col("rawline")
+    matched = raw.isNotNull() & raw.rlike(rx)
     parts = (
         F.when(
-            raw.isNotNull() & raw.rlike(rx),
+            matched & ~raw.contains(sep),
             F.split(
                 F.regexp_replace(
                     "rawline", rx, sep.join(f"${g}" for g in range(1, 8))
                 ),
                 sep,
             ),
+        )
+        .when(
+            matched,
+            F.array(*[F.regexp_extract(raw, rx, g) for g in range(1, 8)]),
         )
         .when(raw.isNotNull(), F.array(*[F.lit("") for _ in range(7)]))
     )

@@ -1,9 +1,9 @@
 """Skew-mitigation utilities (SURVEY.md §6).
 
 AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`, on in
-session.py) covers sort-merge joins; these helpers cover the cases AQE
+session.py) covers sort-merge joins; salted_agg covers the case AQE
 doesn't: hot-key aggregation with expensive per-key state (two-stage
-salted aggregate) and broadcast-averse skewed joins (salt + replicate).
+salted aggregate).
 
 At 100 TB a single hot key (one huge customer, one viral document)
 otherwise pins a whole stage on one task.
@@ -61,28 +61,6 @@ def salted_agg(
         recombine.append(_COMBINERS[comb](F.col(f"_s1_{name}")).alias(name))
     stage1 = salted.groupBy(key, "_salt").agg(*stage1_exprs)
     return stage1.groupBy(key).agg(*recombine)
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-safe equi-join: salt the fact side, replicate the dim side
-    across all salts, join on (key, salt). Use when the dim side is too
-    big to broadcast and the fact side has hot keys."""
-    salted_fact = fact.withColumn(
-        "_salt", (F.rand(seed=42) * n_salts).cast("int")
-    )
-    salts = fact.sparkSession.range(n_salts).select(
-        F.col("id").cast("int").alias("_salt")
-    )
-    replicated_dim = dim.crossJoin(salts)
-    return (
-        salted_fact.join(replicated_dim, [key, "_salt"])
-        .drop("_salt")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -42,7 +42,7 @@ def get_spark(app_name: str = "kinesis-to-firehose-spark", cpus: int | None = No
         # events.parquet carries TIMESTAMP(NANOS) which the vectorized
         # reader rejects; read as long and convert in sources.tables.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # managed-table warehouse (bucketed tables) out of the repo tree
+        # keep the managed-table warehouse dir out of the repo tree
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

@@ -15,12 +15,11 @@ Layout:
 
 At 100 TB: assignment is the corpus laid out cell-clustered (one
 shuffle at build); each query touches N_PROBE partitions' files.
-Appending a new batch = assign against the stored centroids (narrow
-map) + append into the cell partitions.
+Appending a new batch (build_ann_index_epoch) = assign against the
+stored centroids (narrow map) + write its own epoch partition.
 """
 
 from __future__ import annotations
-
 
 
 from pyspark.sql import DataFrame, SparkSession
@@ -198,39 +197,6 @@ def search_ann_index(
         .filter(F.col("rk") <= IVF_TOP_K)
         .select("query_id", "candidate_id", "cell", "cosine", "rk")
         .orderBy("query_id", "rk")
-    )
-
-
-def append_ann_index(
-    spark: SparkSession, new_vectors: DataFrame, path: str
-) -> None:
-    """Continuous ingest for the vector store: assign a NEW batch
-    (vec_id, embedding, nrm) against the STORED centroids (broadcast,
-    narrow map — the codebook is frozen at build time, the standard
-    IVF serving contract) and append into the cell partitions. No
-    stored vector is touched or re-assigned."""
-    from pyspark.sql.window import Window as W
-
-    from kinesis_to_firehose_spark.operators.dedup import dot_expr
-
-    cents = spark.read.parquet(f"{path}/centroids")
-    cos = f"({dot_expr('embedding', 'c_emb', 'spark')} / (nrm * c_nrm))"
-    wa = W.partitionBy("vec_id").orderBy(F.desc("score"), "centroid_id")
-    assigned = (
-        new_vectors.join(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            "centroid_id",
-            F.round(F.expr(cos), 6).alias("score"),
-        )
-        .withColumn("rk", F.row_number().over(wa))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", F.col("centroid_id").alias("cell"), "embedding", "nrm")
-    )
-    assigned.write.mode("append").partitionBy("cell").parquet(
-        f"{path}/assignment"
     )
 
 

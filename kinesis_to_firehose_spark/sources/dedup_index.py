@@ -26,15 +26,10 @@ At 100 TB: the build is one signature pass over the corpus (the same
 explode → min-hash aggregate every dedup op already pays ONCE, here
 amortized across every future ingest); appends add files without
 rewriting; probes shuffle only the day's batch to the index's key
-distribution. A bucketed-table write (sources/bucketed.py) would
-make the band join entirely shuffle-free on the stored side — plain
-repartitioned parquet keeps this module dependency-light while
-preserving the join shape.
+distribution.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -307,140 +302,6 @@ def run_dedup_ingest_stream(
         .foreachBatch(handle)
         .start()
     )
-
-
-# ---------------------------------------------------------------------
-# Bloom sidecar + compaction — the operational half of the index.
-#
-# The sidecar is the fingerprint table's Bloom filter (functions/
-# bloom.py words), stored as _bloom.json next to the data. Blooms are
-# UNION-MERGEABLE BY BITWISE OR, so an append ORs its batch's words
-# into the sidecar without rescanning the store — the same property
-# that makes per-file blooms work in Iceberg/Delta manifests. Probes
-# apply the bloom as a scan predicate on the NEW batch's fingerprints:
-# rows failing it are definitive non-members (no false negatives) and
-# skip the membership join entirely; false positives are removed by
-# the exact join that follows, so verdicts are bit-identical.
-#
-# compact_dedup_index solves the small-files problem a thousand
-# streaming epochs create: it rewrites the epoch-partition store as a
-# flat store with one file set, preserving content (probe parity
-# asserted in tests). Single-writer maintenance op — run it when the
-# stream is paused, like any store compaction.
-# ---------------------------------------------------------------------
-_BLOOM_SIDE = "_bloom.json"
-
-
-def _bloom_path(path: str) -> str:
-    return f"{path}/{_BLOOM_SIDE}"
-
-
-def _write_bloom(path: str, words: list[int], m_bits: int, k: int) -> None:
-    import json
-    import os
-
-    tmp = _bloom_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"m_bits": m_bits, "k": k, "words": words}, f)
-    os.replace(tmp, _bloom_path(path))
-
-
-def read_bloom(path: str) -> dict | None:
-    import json
-    import os
-
-    if not os.path.exists(_bloom_path(path)):
-        return None
-    with open(_bloom_path(path)) as f:
-        return json.load(f)
-
-
-def attach_bloom(spark: SparkSession, docs: DataFrame, path: str) -> None:
-    """Build (or OR-merge into) the fingerprint bloom sidecar from a
-    batch's fingerprints — call alongside every build/append."""
-    from kinesis_to_firehose_spark.functions.bloom import (
-        K_HASHES,
-        M_BITS,
-        bloom_build,
-    )
-    from kinesis_to_firehose_spark.operators.dedup import doc_fingerprints
-
-    words = bloom_build(doc_fingerprints(docs).select("h"), "h")
-    existing = read_bloom(path)
-    if existing is not None:
-        words = [a | b for a, b in zip(existing["words"], words)]
-    _write_bloom(path, words, M_BITS, K_HASHES)
-
-
-def probe_dedup_index_bloomed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    path: str,
-    max_epoch: int | None = None,
-) -> DataFrame:
-    """probe_dedup_index with the sidecar applied: new fingerprints
-    failing the bloom skip the membership join (is_exact_dup = 0 by
-    no-false-negatives); passing rows go through the exact join, so
-    the output equals the plain probe bit-for-bit."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.functions.bloom import bloom_probe
-    from kinesis_to_firehose_spark.operators.dedup import (
-        doc_band_keys,
-        doc_fingerprints,
-        incremental_verdicts,
-    )
-
-    side = read_bloom(path)
-    if side is None:
-        return probe_dedup_index(spark, new_docs, path, max_epoch)
-    old_fp = spark.read.parquet(f"{path}/fp")
-    old_bands = spark.read.parquet(f"{path}/bands")
-    if max_epoch is not None:
-        old_fp = old_fp.filter(F.col("epoch") <= max_epoch)
-        old_bands = old_bands.filter(F.col("epoch") <= max_epoch)
-    new_fp = doc_fingerprints(new_docs)
-    pred = bloom_probe("h", side["words"], side["m_bits"], side["k"])
-    maybe = new_fp.filter(pred)
-    definitely_not = new_fp.filter(~pred)
-    # run the shared verdict assembly on the maybe-side only, then
-    # splice the definite non-members back as is_exact_dup = 0 rows
-    # with their own near-candidate counts (bands are bloom-agnostic)
-    all_bands = doc_band_keys(new_docs)
-    verdicts_maybe = incremental_verdicts(
-        maybe,
-        all_bands.join(maybe.select("doc_id"), "doc_id", "left_semi"),
-        old_fp.select("doc_id", "h"),
-        old_bands.select("doc_id", "band_idx", "band_key"),
-    )
-    verdicts_no = incremental_verdicts(
-        definitely_not,
-        all_bands.join(
-            definitely_not.select("doc_id"), "doc_id", "left_semi"
-        ),
-        old_fp.select("doc_id", "h").limit(0),
-        old_bands.select("doc_id", "band_idx", "band_key"),
-    )
-    return verdicts_maybe.unionByName(verdicts_no).orderBy("doc_id")
-
-
-def compact_dedup_index(spark: SparkSession, path: str) -> None:
-    """Rewrite an epoch-partition store as a flat store (one file set
-    per table) — the small-files maintenance op after many streaming
-    epochs. Content-preserving; single-writer."""
-    import shutil
-
-    from pyspark.sql import functions as F  # noqa: F401
-
-    for sub, key in (("fp", "h"), ("bands", "band_key")):
-        df = spark.read.parquet(f"{path}/{sub}")
-        cols = [c for c in df.columns if c != "epoch"]
-        tmp = f"{path}/{sub}__compact"
-        df.select(*cols).repartition(key).write.mode("overwrite").parquet(
-            tmp
-        )
-        shutil.rmtree(f"{path}/{sub}")
-        shutil.move(tmp, f"{path}/{sub}")
 
 
 def corpus_rarity_docs_store(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,8 +16,7 @@ Design (100 TB posture):
   order) — re-runs over identical data produce identical trees,
   which is what makes the manifest diffable and the export rsyncable.
 - `_manifest.json` records per-partition files, row counts, and
-  bytes — the contract a loader checks before training (and the
-  same shape the snapshot store's manifests use).
+  bytes — the contract a loader checks before training.
 """
 
 from __future__ import annotations

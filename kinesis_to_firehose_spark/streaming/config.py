@@ -77,7 +77,7 @@ def config_from_env(
     LOG_FILE timestamp suffix."""
     import os
 
-    if env is None:  # pragma: no cover - prod path
+    if env is None:
         env = os.environ
     if now is None:
         now = datetime.now()

@@ -159,7 +159,12 @@ class Boto3FirehoseTransport:
     (firehose_sender.go:47-50, endpoint from FIREHOSE_AWS_ENDPOINT via
     main.go:59) — so this transport defaults botocore retries to
     max_attempts=10 and accepts `endpoint_url=`, and `from_config`
-    plumbs both straight from the resolved PipelineEnvConfig."""
+    plumbs both straight from the resolved PipelineEnvConfig.
+
+    `delivery_stream`, when set, names the one Firehose stream every
+    batch goes to, whatever its per-type tag: the reference sends to
+    FIREHOSE_STREAM_NAME only (firehose_sender.go:75), and
+    `from_config` sets it from there."""
 
     # firehose_sender.go:48 WithMaxRetries(10): SDK-level retry budget
     # for throttling/5xx on the PutRecordBatch call itself — distinct
@@ -173,21 +178,25 @@ class Boto3FirehoseTransport:
         endpoint_url: str | None = None,
         max_attempts: int = MAX_API_RETRIES,
         boto3_module=None,
+        delivery_stream: str | None = None,
     ):
         self._client = client
         self._region = region_name
         self._endpoint = endpoint_url
         self._max_attempts = max_attempts
         self._boto3 = boto3_module
+        self._delivery_stream = delivery_stream
 
     @classmethod
     def from_config(cls, cfg, client=None):
-        """Build from a resolved PipelineEnvConfig — region + endpoint
-        exactly as the reference wires them (main.go:46-60)."""
+        """Build from a resolved PipelineEnvConfig — region, endpoint
+        and delivery stream exactly as the reference wires them
+        (main.go:46-60)."""
         return cls(
             client=client,
             region_name=cfg.firehose_region,
             endpoint_url=cfg.firehose_endpoint,
+            delivery_stream=cfg.firehose_stream,
         )
 
     def client_kwargs(self) -> dict:
@@ -225,7 +234,7 @@ class Boto3FirehoseTransport:
 
     def __call__(self, records: list[bytes], stream: str) -> list[int]:
         resp = self._cli().put_record_batch(
-            DeliveryStreamName=stream,
+            DeliveryStreamName=self._delivery_stream or stream,
             Records=[{"Data": r} for r in records],
         )
         return [

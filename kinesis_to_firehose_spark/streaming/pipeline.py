@@ -139,10 +139,10 @@ def file_stream_source(
 def decoded_stream(events: DataFrame) -> DataFrame:
     """Decode + serialize, producing (stream, line) delivery rows.
 
-    stream tag = event_type (the reference routes by log tag to the
-    configured delivery stream; firehose_sender.go:75 uses a single
-    stream name — we keep per-type streams to exercise multi-stream
-    routing, same as kbc's []string tags)."""
+    stream tag = event_type: local transports keep one directory per
+    type, to exercise multi-stream routing like kbc's []string tags.
+    The boto3 transport built from the env config sends every tag to
+    FIREHOSE_STREAM_NAME, the one stream of firehose_sender.go:75."""
     d = decode_enhance(events)
     return d.select(
         F.col("event_type").alias("stream"),

@@ -1224,56 +1224,6 @@ def test_ann_index_search_matches_inplan_ivf(spark, tmp_path):
     ]
 
 
-def test_ann_index_append_serves_new_vectors(spark, tmp_path):
-    """Vector-store ingest: appending a batch assigns it against the
-    FROZEN stored centroids and subsequent searches see the new
-    vectors — equal to an index built over the union corpus (same
-    centroids, so identical assignment)."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.operators.dedup import (
-        normed_embeddings,
-    )
-    from kinesis_to_firehose_spark.operators.similarity import N_QUERIES
-    from kinesis_to_firehose_spark.sources.ann_index import (
-        append_ann_index,
-        build_ann_index,
-        search_ann_index,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    n = normed_embeddings(spark, sf)
-    full = str(tmp_path / "full")
-    build_ann_index(spark, sf, full)
-
-    # partial store: drop vec_id % 7 == 3 from the assignment, then
-    # append exactly those — must converge to the full store's answers
-    part = str(tmp_path / "part")
-    build_ann_index(spark, sf, part)
-    import shutil
-
-    kept = spark.read.parquet(f"{part}/assignment").filter(
-        F.col("vec_id") % 7 != 3
-    )
-    tmp_dir = str(tmp_path / "kept")
-    kept.write.partitionBy("cell").mode("overwrite").parquet(tmp_dir)
-    shutil.rmtree(f"{part}/assignment")
-    shutil.move(tmp_dir, f"{part}/assignment")
-    append_ann_index(
-        spark,
-        n.filter(F.col("vec_id") % 7 == 3).select(
-            "vec_id", "embedding", "nrm"
-        ),
-        part,
-    )
-    queries = n.filter(F.col("vec_id") < N_QUERIES)
-    got = [tuple(r) for r in search_ann_index(spark, queries, part).collect()]
-    want = [
-        tuple(r) for r in search_ann_index(spark, queries, full).collect()
-    ]
-    assert got == want
-
-
 def test_emb_band_candidates_hot_bucket_gate(spark):
     """A planted hot bucket (identical vectors, one bucket per band)
     must produce O(n·lags) chained candidates, not O(n²): every

@@ -233,15 +233,6 @@ def _wav_bytes(samples, rate=8000):
     return buf.getvalue()
 
 
-def test_codec_status_reports_a_path_per_kind():
-    from kinesis_to_firehose_spark.functions.codecs import codec_status
-
-    st = codec_status()
-    assert st["image"] in ("PIL", "builtin-ppm")
-    assert st["audio"] in ("soundfile", "builtin-wav")
-    assert st["video"] in ("av", "stub")
-
-
 def test_real_image_decode_ppm():
     """The import-try image path must really decode pixel data: a
     half-black/half-white PPM yields dark cells left, bright right."""

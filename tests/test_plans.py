@@ -77,40 +77,6 @@ def test_filter_allowlist_pushdown(spark):
     assert "event_type" in pushed_filters(df)
 
 
-def test_cobucketed_join_has_no_exchange(spark):
-    """Write lineitem+orders bucketed by orderkey: the fact-fact join
-    must then run with ZERO Exchange operators (the shuffle moved to
-    write time, once) — the co-location story that matters at 100 TB."""
-    from kinesis_to_firehose_spark.plans.explain import physical_plan
-    from kinesis_to_firehose_spark.sources.bucketed import (
-        cobucketed_join,
-        write_bucketed,
-    )
-
-    l = write_bucketed(spark, SF, "lineitem", "l_orderkey", 4)
-    o = write_bucketed(spark, SF, "orders", "o_orderkey", 4)
-    # at test SF the planner would broadcast tiny orders (which also
-    # disables bucket use); lower the threshold to exercise the
-    # at-scale shape where neither side fits an executor
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = cobucketed_join(spark, l, o, "l_orderkey", "o_orderkey")
-        plan = physical_plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # sanity: same row count as the shuffled join of the raw parquet
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    li = load(spark, "lineitem", SF)
-    od = load(spark, "orders", SF)
-    raw = li.join(od, li["l_orderkey"] == od["o_orderkey"]).count()
-    assert joined.count() == raw
-
-
 def test_drop_stats_single_raw_pass(spark):
     """The four drop_stats views must re-aggregate the materialized
     pre-agg, never replay the raw-events scan per branch."""
@@ -311,60 +277,6 @@ def test_plan_digest_counts(spark):
     assert set(committed["decode_parse_enhance"]) == set(d)
 
 
-def test_bucketed_documents_per_doc_pipeline_no_exchange(spark):
-    """documents bucketed by doc_id: the per-doc metric family
-    (narrow metrics ∪ explode+groupBy(doc_id) aggregates, joined back
-    on doc_id — the quality_fused shape) must plan with ZERO
-    exchanges: the bucketed scan reports hash partitioning on doc_id,
-    which survives narrow maps AND the token explode, so the groupBy,
-    the window, and the join all reuse it. This is the write-once
-    shuffle-never option for every per-doc curation op at 100 TB."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.operators.dedup import TOK_EXPR
-    from kinesis_to_firehose_spark.plans.explain import physical_plan
-    from kinesis_to_firehose_spark.sources.bucketed import write_bucketed
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    t = write_bucketed(spark, SF, "documents", "doc_id", 4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the join must rely on co-partitioning
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        d = spark.table(t)
-        narrow = d.select(
-            "doc_id", F.size(F.expr(TOK_EXPR)).alias("n_tokens")
-        )
-        toks = d.select(
-            "doc_id", F.explode(F.expr(TOK_EXPR)).alias("tok")
-        )
-        agg = toks.groupBy("doc_id").agg(
-            F.countDistinct("tok").alias("n_distinct")
-        )
-        joined = narrow.join(agg, "doc_id")
-        plan = physical_plan(joined)
-        assert "Exchange" not in plan, plan[:3000]
-        assert "SortMergeJoin" in plan
-        # correctness: same result as the unbucketed path
-        raw = load(spark, "documents", SF)
-        want = (
-            raw.select("doc_id", F.size(F.expr(TOK_EXPR)).alias("n_tokens"))
-            .join(
-                raw.select(
-                    "doc_id", F.explode(F.expr(TOK_EXPR)).alias("tok")
-                )
-                .groupBy("doc_id")
-                .agg(F.countDistinct("tok").alias("n_distinct")),
-                "doc_id",
-            )
-        )
-        assert sorted(map(tuple, joined.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def test_materialized_scan_sharing(spark):
     """Inside sources.tables.materialized(): queries read the cached
     table (InMemoryTableScan in the plan) and return identical
@@ -390,35 +302,9 @@ def test_materialized_scan_sharing(spark):
 
 
 def test_shuffle_advisor_arithmetic_and_aqe_coalesce(spark):
-    """The advisor rounds shuffled-bytes/target UP within clamps, and
-    the over-provisioned direction it relies on is safe because AQE
+    """Over-provisioned shuffle partitions are safe because AQE
     demonstrably coalesces: a tiny aggregate run at 32 shuffle
     partitions executes with far fewer after coalescing."""
-    from kinesis_to_firehose_spark.plans.shuffle import (
-        TARGET_SHUFFLE_PARTITION_BYTES as T,
-    )
-    from kinesis_to_firehose_spark.plans.shuffle import (
-        advise_for_tables,
-        advise_shuffle_partitions,
-        table_bytes,
-    )
-
-    # arithmetic: joins move all input; aggs ~1%; narrow none
-    assert advise_shuffle_partitions(100 * T, "join") == 100
-    assert advise_shuffle_partitions(100 * T, "agg") == 1
-    assert advise_shuffle_partitions(0, "narrow") == 1
-    assert advise_shuffle_partitions(10**18, "join", max_partitions=500) == 500
-    # 100 TB sanity: full-shuffle join ⇒ ~500k partitions (SURVEY §6)
-    assert advise_shuffle_partitions(100 * 10**12, "join") == 476838
-    import pytest as _pytest
-
-    with _pytest.raises(KeyError):
-        advise_shuffle_partitions(1, "bogus")
-
-    # table-bytes path: tiny testdata advises the minimum
-    assert table_bytes(SF, ("lineitem", "orders")) > 0
-    assert advise_for_tables(SF, ("lineitem", "orders"), "join") == 1
-
     # AQE coalesce in action: executed plan shows a coalesced
     # AQEShuffleRead with fewer partitions than the configured 32
     from kinesis_to_firehose_spark.sources.tables import load
@@ -447,14 +333,49 @@ def _unpartitioned_window_specs(plan_text: str) -> list[str]:
 
     out = []
     for m in re.finditer(r"windowspecdefinition\(", plan_text):
-        seg = plan_text[m.end() : m.end() + 300]
-        seg = seg.split(", specifiedwindowframe")[0]
-        first = seg.split(", ")[0].strip()
+        first = _first_call_arg(plan_text, m.end())
         if first.startswith("specifiedwindowframe") or re.search(
             r"\b(ASC|DESC)(\s+NULLS\s+(FIRST|LAST))?$", first
         ):
             out.append(first)
     return out
+
+
+def _first_call_arg(text: str, start: int) -> str:
+    """The first argument of the call whose argument list begins at
+    text[start]. A comma ends it only at parenthesis depth 0, so
+    `coalesce(a#1, b#2) ASC` stays one argument."""
+    depth = 0
+    for i in range(start, len(text)):
+        c = text[i]
+        if c == "(":
+            depth += 1
+        elif c == ")" and depth > 0:
+            depth -= 1
+        elif c in ",)" and depth == 0:
+            return text[start:i].strip()
+    return text[start:].strip()
+
+
+def test_unpartitioned_window_specs_parses_nested_parentheses():
+    """A nested call's comma must not end the first window-spec
+    argument: an order item over coalesce(...) is still an order item,
+    and a partition column over coalesce(...) is still a partition."""
+    frame = "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())"
+    order_only = (
+        "rank(x#3) windowspecdefinition(coalesce(a#1, b#2) ASC NULLS FIRST, "
+        f"{frame}) AS rk#4"
+    )
+    assert _unpartitioned_window_specs(order_only) == [
+        "coalesce(a#1, b#2) ASC NULLS FIRST"
+    ]
+    partitioned = (
+        "rank(x#3) windowspecdefinition(coalesce(a#1, b#2), "
+        f"x#3 DESC NULLS LAST, {frame}) AS rk#4"
+    )
+    assert _unpartitioned_window_specs(partitioned) == []
+    frame_only = f"sum(v#5) windowspecdefinition({frame}) AS s#6"
+    assert _unpartitioned_window_specs(frame_only) == [frame]
 
 
 def test_every_unpartitioned_window_is_allowlisted(spark):

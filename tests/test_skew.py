@@ -1,10 +1,10 @@
-"""Salted aggregation/join equivalence tests."""
+"""Salted aggregation equivalence tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kinesis_to_firehose_spark.operators.skew import salted_agg, salted_join
+from kinesis_to_firehose_spark.operators.skew import salted_agg
 from kinesis_to_firehose_spark.sources.tables import load
 
 SF = "/root/testdata/sf0.001"
@@ -27,16 +27,6 @@ def test_salted_agg_matches_plain(spark):
             n_salts=8,
         ).collect()
     }
-    assert salted == plain
-
-
-def test_salted_join_matches_plain(spark):
-    l = load(spark, "lineitem", SF).select("l_orderkey", "l_quantity")
-    o = load(spark, "orders", SF).select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = l.join(o, "l_orderkey").count()
-    salted = salted_join(l, o, "l_orderkey", n_salts=4).count()
     assert salted == plain
 
 
@@ -74,49 +64,3 @@ def test_salted_agg_explicit_combiner(spark):
         .collect()
     }
     assert got == want
-
-
-def test_advise_join_strategies(spark, tmp_path):
-    """Sketch-based join advisor: a small dim side → broadcast; two
-    fact sides → shuffle + bucket candidate; a hot-key side → salt."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.plans.shuffle import advise_join
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    sf = "/root/testdata/sf0.01"
-    li = load(spark, "lineitem", sf)
-    orders = load(spark, "orders", sf)
-    supplier = load(spark, "supplier", sf)
-
-    a = advise_join(
-        li.withColumnRenamed("l_suppkey", "k"),
-        supplier.withColumnRenamed("s_suppkey", "k"),
-        "k",
-    )
-    assert a["strategy"] == "broadcast_right" and not a["salt"]
-
-    # force both sides over a tiny broadcast budget → shuffle
-    b = advise_join(
-        li.withColumnRenamed("l_orderkey", "k"),
-        orders.withColumnRenamed("o_orderkey", "k"),
-        "k",
-        broadcast_bytes=1024,
-    )
-    assert b["strategy"] == "shuffle" and b["bucket_candidate"]
-    assert not b["salt"]
-
-    # planted hot key: 50% of rows share one key
-    n = 10_000
-    skewed = spark.range(n).select(
-        F.when(F.col("id") % 2 == 0, 7).otherwise(F.col("id")).alias("k")
-    )
-    skewed.write.mode("overwrite").parquet(f"{tmp_path}/skewed")
-    skewed_df = spark.read.parquet(f"{tmp_path}/skewed")
-    c = advise_join(
-        skewed_df,
-        orders.withColumnRenamed("o_orderkey", "k"),
-        "k",
-        broadcast_bytes=1024,
-    )
-    assert c["salt"] and c["left"]["top_key_share"] > 0.4

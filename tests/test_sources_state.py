@@ -1,4 +1,4 @@
-"""Format round-trips + stateful rate-limit operator tests."""
+"""Source robustness, persisted stores, env config and CLI tests."""
 
 from __future__ import annotations
 
@@ -7,153 +7,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis_to_firehose_spark.sources.io import read_table, write_table
 from kinesis_to_firehose_spark.sources.tables import load
-from kinesis_to_firehose_spark.streaming.pipeline import (
-    EVENT_SCHEMA,
-    write_source_slice,
-)
-from kinesis_to_firehose_spark.streaming.ratelimit import rate_limited_counts
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.mark.parametrize("fmt", ["parquet", "csv", "json", "orc"])
-def test_format_round_trip(spark, tmp_path, fmt):
-    src = load(spark, "events", SF).select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    path = str(tmp_path / fmt)
-    write_table(src, path, fmt)
-    back = read_table(spark, path, fmt, schema=src.schema)
-    assert back.count() == src.count()
-    a = sorted(r["event_id"] for r in src.select("event_id").collect())
-    b = sorted(int(r["event_id"]) for r in back.select("event_id").collect())
-    assert a == b
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    src = load(spark, "events", SF)
-    path = str(tmp_path / "by_type")
-    write_table(src, path, "parquet", partition_by=["event_type"])
-    clicks = read_table(spark, path, "parquet").filter(
-        F.col("event_type") == "click"
-    )
-    plan = clicks._jdf.queryExecution().executedPlan().toString()
-    n = clicks.count()
-    want = src.filter(F.col("event_type") == "click").count()
-    assert n == want
-    # partition filter, not a data filter: pruned at planning time
-    assert "PartitionFilters" in plan or "event_type" not in plan
-
-
-def test_schema_evolution_merge(spark, tmp_path):
-    """Files written under an older schema must read back alongside
-    newer files: added columns surface as NULL on old rows, and a
-    projection of only old columns is unaffected."""
-    from kinesis_to_firehose_spark.sources.io import read_table_evolved
-
-    path = str(tmp_path / "evolving")
-    v1 = load(spark, "events", SF).select("event_id", "user_id")
-    v1.write.mode("append").parquet(path)
-    v2 = load(spark, "events", SF).select(
-        "event_id", "user_id", F.col("value").alias("score")
-    )
-    v2.write.mode("append").parquet(path)
-
-    merged = read_table_evolved(spark, path)
-    assert set(merged.columns) == {"event_id", "user_id", "score"}
-    n = v1.count()
-    assert merged.count() == 2 * n
-    # old files surface the new column as NULL
-    assert merged.filter(F.col("score").isNull()).count() == n
-    # old-column projection reads both generations
-    assert merged.select("event_id").count() == 2 * n
-    with pytest.raises(ValueError):
-        read_table_evolved(spark, path, fmt="csv")
-
-
-def test_rename_round_trip(spark, tmp_path):
-    """Column-rename → write → read → rename-back round trip is
-    lossless, and renaming an absent column raises."""
-    from kinesis_to_firehose_spark.sources.io import rename_columns
-
-    src = load(spark, "events", SF).select("event_id", "user_id", "value")
-    renamed = rename_columns(src, {"event_id": "id", "value": "v"})
-    assert renamed.columns == ["id", "user_id", "v"]
-    path = str(tmp_path / "renamed")
-    write_table(renamed, path, "parquet")
-    back = rename_columns(
-        read_table(spark, path, "parquet"), {"id": "event_id", "v": "value"}
-    )
-    assert set(back.columns) == {"event_id", "user_id", "value"}
-    a = sorted(r["event_id"] for r in src.collect())
-    b = sorted(r["event_id"] for r in back.collect())
-    assert a == b
-    with pytest.raises(ValueError):
-        rename_columns(src, {"nope": "x"})
-
-
-def test_rate_limited_counts_state_accumulates(spark, tmp_path):
-    src_dir = str(tmp_path / "src")
-    write_source_slice(spark, SF, src_dir, n_files=2)
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)  # 2 micro-batches
-        .parquet(src_dir)
-    )
-    out = rate_limited_counts(stream, records_per_trigger=10)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("rate_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM rate_out").collect()
-    assert rows, "stateful operator produced no output"
-    total_expected = load(spark, "events", SF).count()
-    # final totals across shards == total records (state accumulated)
-    final_totals = {}
-    for r in rows:
-        final_totals[r["shard"]] = max(
-            final_totals.get(r["shard"], 0), r["total_records"]
-        )
-    assert sum(final_totals.values()) == total_expected
-    # over_limit consistent with the per-trigger budget
-    assert all(r["over_limit"] >= 0 for r in rows)
-    assert any(r["over_limit"] > 0 for r in rows)  # sf0.001 shards exceed 10
-
-
-def test_compact_table_hits_target_file_count(spark, tmp_path):
-    """1 MiB target over a source scattered into 64 tiny files →
-    output file count == ceil(source_bytes / target); all rows
-    survive."""
-    from kinesis_to_firehose_spark.sources.io import compact_table
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    src = str(tmp_path / "scattered")
-    dst = str(tmp_path / "compacted")
-    events = load(spark, "events", "/root/testdata/sf0.01")
-    events.repartition(64).write.mode("overwrite").parquet(src)
-
-    import os
-
-    src_bytes = sum(
-        os.path.getsize(os.path.join(src, f))
-        for f in os.listdir(src)
-        if f.startswith("part-")
-    )
-    target = 1024 * 1024
-    n_out = compact_table(spark, src, dst, target_file_bytes=target)
-    import math
-
-    assert n_out == math.ceil(src_bytes / target)
-    assert spark.read.parquet(dst).count() == events.count()
-    n_src_files = len([f for f in os.listdir(src) if f.startswith("part-")])
-    assert n_out < n_src_files
 
 
 def test_decode_enhance_survives_malformed_props(spark):
@@ -204,6 +60,29 @@ def test_syslog_parse_survives_garbage_lines(spark):
     assert out[3]["pri"] is None
 
 
+def test_syslog_parse_keeps_separator_byte_in_fields(spark):
+    """The parser joins its seven captures with \\x01 and splits them
+    back, so a \\x01 inside the payload or the hostname must not shift
+    or cut any field."""
+    from kinesis_to_firehose_spark.operators.logpipe import parse_syslog_lines
+
+    rows = [
+        (1, "<14>2000-01-01T00:00:00.000000Z ip-10-0-0-7 "
+            'production--click[1007]: {"title":"cl\x01ick","k":3}'),
+        (2, "<14>2000-01-01T00:00:00.000000Z ip-10\x01-0-0-7 "
+            'production--click[1007]: {"title":"click","k":4}'),
+    ]
+    df = spark.createDataFrame(rows, "event_id long, rawline string")
+    out = {r["event_id"]: r for r in parse_syslog_lines(df).collect()}
+    assert out[1]["payload_title"] == "cl\x01ick"
+    assert out[1]["payload_k"] == 3
+    assert out[2]["hostname"] == "ip-10\x01-0-0-7"
+    assert (out[2]["env"], out[2]["container_app"], out[2]["pid"]) == (
+        "production", "click", 1007
+    )
+    assert out[2]["payload_k"] == 4
+
+
 def test_jsonl_read_captures_corrupt_records(spark, tmp_path):
     """PERMISSIVE ingestion: a malformed JSONL line must land in the
     _corrupt_record column — visible and dead-letterable — while good
@@ -241,628 +120,6 @@ def test_jsonl_read_captures_corrupt_records(spark, tmp_path):
         assert "not json" in bad.collect()[0]["_corrupt_record"]
     finally:
         df.unpersist()
-
-
-def test_snapshot_write_and_point_lookup(spark, tmp_path):
-    """The persisted snapshot serves point lookups correctly, the key
-    filter reaches the parquet scan (PushedFilters), and each key
-    lives in exactly one file (the pruning property of the layout)."""
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.sources.bucketed import (
-        snapshot_data_root,
-        snapshot_lookup,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "snap")
-    snap = all_ops()["latest_per_key"].fn(spark, SF)
-    write_snapshot(spark, snap, path, n_key_files=4)
-
-    want = {
-        r["user_id"]: (r["event_id"], r["value"])
-        for r in snap.collect()
-        if r["user_id"] in {1, 5, 9}
-    }
-    looked = snapshot_lookup(spark, path, "user_id", [1, 5, 9], n_key_files=4)
-    got = {
-        r["user_id"]: (r["event_id"], r["value"]) for r in looked.collect()
-    }
-    assert got == want
-
-    plan = looked._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "user_id" in plan
-    # the _pid partition filter prunes whole dirs at planning time
-    assert "PartitionFilters" in plan and "_pid" in plan
-
-    # layout property: a key's rows are never split across files
-    back = spark.read.parquet(snapshot_data_root(path)).select(
-        "user_id", F.input_file_name().alias("f")
-    )
-    multi = (
-        back.groupBy("user_id")
-        .agg(F.countDistinct("f").alias("nf"))
-        .filter(F.col("nf") > 1)
-        .count()
-    )
-    assert multi == 0
-
-
-def test_zorder_layout_prunes_2d_box_queries(spark, tmp_path):
-    """Z-order clustering must let a 2-D box query skip files that a
-    single-column (time-sorted) layout cannot: per-file min/max boxes
-    are small in BOTH dimensions, and results are identical."""
-    from kinesis_to_firehose_spark.sources.layout import (
-        candidate_files_for_box,
-        write_zorder,
-    )
-
-    e = load(spark, "events", "/root/testdata/sf0.01").select(
-        "event_id", "user_id", "ts", "value",
-        F.unix_timestamp("ts").alias("ts_s"),
-    )
-    n_files = 16
-    z_path = str(tmp_path / "zorder")
-    lin_path = str(tmp_path / "linear")
-    write_zorder(e, "user_id", "ts_s", z_path, n_files=n_files)
-    # linear comparison layout: sorted by time only
-    (
-        e.repartitionByRange(n_files, "ts_s")
-        .sortWithinPartitions("ts_s")
-        .write.mode("overwrite")
-        .parquet(lin_path)
-    )
-
-    users = e.agg(F.min("user_id"), F.max("user_id")).collect()[0]
-    times = e.agg(F.min("ts_s"), F.max("ts_s")).collect()[0]
-    u_mid = (users[0] + users[1]) // 2
-    t_mid = (times[0] + times[1]) // 2
-    # the z-order win case: narrow in the dimension the time-sorted
-    # layout cannot serve (1/16 of users), wide in time (1/2) — a
-    # "this user's recent history" query
-    box = (
-        u_mid, u_mid + max(1, (users[1] - users[0]) // 16),
-        t_mid, times[1],
-    )
-    z_hit, z_total = candidate_files_for_box(
-        spark, z_path, "user_id", "ts_s", box
-    )
-    l_hit, l_total = candidate_files_for_box(
-        spark, lin_path, "user_id", "ts_s", box
-    )
-    assert z_total == l_total == n_files
-    # time-sorted layout cannot prune on user_id: the box hits every
-    # time-overlapping file; z-order must strictly beat it
-    assert z_hit < l_hit, (z_hit, l_hit)
-
-    # correctness: the same box filter returns identical rows
-    def box_rows(path):
-        df = spark.read.parquet(path)
-        return sorted(
-            r["event_id"]
-            for r in df.filter(
-                (F.col("user_id") >= box[0]) & (F.col("user_id") <= box[1])
-                & (F.col("ts_s") >= box[2]) & (F.col("ts_s") <= box[3])
-            ).collect()
-        )
-
-    assert box_rows(z_path) == box_rows(lin_path)
-
-
-def test_snapshot_merge_targeted_touches_only_changed_dirs(spark, tmp_path):
-    """A targeted merge must rewrite exactly the _pid partition dirs
-    whose keys changed — byte-identical (file names + mtime + size)
-    elsewhere — and land on the same content a full rewrite would."""
-    import os
-
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.sources.bucketed import (
-        snapshot_data_root,
-        snapshot_merge_targeted,
-        write_snapshot,
-    )
-
-    n = 8
-    path = str(tmp_path / "snap")
-    snap = all_ops()["latest_per_key"].fn(spark, SF)
-    write_snapshot(spark, snap, path, n_key_files=n)
-
-    def dir_state():
-        root = snapshot_data_root(path)
-        out = {}
-        for d in os.listdir(root):
-            if not d.startswith("_pid="):
-                continue
-            full = os.path.join(root, d)
-            out[d] = sorted(
-                (f, os.path.getmtime(os.path.join(full, f)),
-                 os.path.getsize(os.path.join(full, f)))
-                for f in os.listdir(full)
-                if f.startswith("part-")
-            )
-        return out
-
-    before = dir_state()
-    assert len(before) > 1  # the merge has unaffected dirs to preserve
-
-    # change two keys: bump their value via a fake newer event
-    changed_keys = sorted(r["user_id"] for r in snap.collect())[:2]
-    changes = (
-        snap.filter(F.col("user_id").isin(changed_keys))
-        .withColumn("value", F.col("value") + 1000.0)
-        .localCheckpoint(eager=True)
-    )
-    pids = snapshot_merge_targeted(spark, path, changes, n_key_files=n)
-    assert 0 < len(pids) <= 2
-
-    after = dir_state()
-    assert set(after) == set(before)
-    changed_dirs = {d for d in before if before[d] != after[d]}
-    assert changed_dirs == {f"_pid={p}" for p in pids}
-
-    # content equals (old snapshot with those keys replaced)
-    got = {
-        r["user_id"]: r["value"]
-        for r in spark.read.parquet(snapshot_data_root(path)).collect()
-    }
-    for r in snap.collect():
-        if r["user_id"] in changed_keys:
-            assert got[r["user_id"]] == r["value"] + 1000.0
-        else:
-            assert got[r["user_id"]] == r["value"]
-
-
-@pytest.mark.parametrize("layout", ["dirs", "manifest"])
-def test_snapshot_merge_crash_atomicity(spark, tmp_path, monkeypatch, layout):
-    """Chaos: kill the merge at EVERY stage boundary and assert a
-    reader never observes a half-written store — it sees exactly the
-    pre-merge content before the meta flip and exactly the post-merge
-    content after it — and that a retried merge always converges.
-    Runs for both store layouts (versioned dirs and manifest)."""
-    import os
-
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    def mk_df(rows):
-        return spark.createDataFrame(
-            rows, "user_id long, event_id long, value double"
-        )
-
-    base_rows = [(i, 100 + i, float(i)) for i in range(12)]
-    change_rows = [(2, 900, 2222.0), (7, 901, 7777.0)]
-    pre = {r[0]: (r[1], r[2]) for r in base_rows}
-    post = dict(pre)
-    for k, e, v in change_rows:
-        post[k] = (e, v)
-
-    class Boom(RuntimeError):
-        pass
-
-    def read_store(path):
-        return {
-            r["user_id"]: (r["event_id"], r["value"])
-            for r in B.snapshot_read(spark, path).collect()
-        }
-
-    for crash_at in ["pre-build", "post-build", "pre-commit", "post-commit"]:
-        path = str(tmp_path / f"snap-{crash_at}")
-        B.write_snapshot(
-            spark, mk_df(base_rows), path, n_key_files=4, layout=layout
-        )
-        assert read_store(path) == pre
-
-        def boom(stage, _crash=crash_at):
-            if stage == _crash:
-                raise Boom(stage)
-
-        monkeypatch.setattr(B, "_chaos_hook", boom)
-        try:
-            B.snapshot_merge_targeted(spark, path, mk_df(change_rows))
-            raise AssertionError("chaos hook did not fire")
-        except Boom:
-            pass
-        # the store is never half-written: before the meta flip the
-        # reader sees the old version intact, after it the new one
-        observed = read_store(path)
-        assert observed in (pre, post), (crash_at, observed)
-        if crash_at == "post-commit":
-            assert observed == post
-
-        # recovery: a retried merge (no faults) always converges
-        monkeypatch.setattr(B, "_chaos_hook", lambda stage: None)
-        B.snapshot_merge_targeted(spark, path, mk_df(change_rows))
-        assert read_store(path) == post
-        # and leaves exactly one committed version behind (dead builds
-        # and stale versions / unreferenced files garbage-collected)
-        meta = B._read_meta(path)
-        leftovers = [
-            d
-            for d in os.listdir(path)
-            if d.startswith("v=")
-            or d.startswith(".build-")
-            or d.startswith("manifest-v")
-        ]
-        if layout == "dirs":
-            assert leftovers == [f"v={meta['version']}"], leftovers
-        else:
-            assert leftovers == [f"manifest-v{meta['version']}.json"], leftovers
-            manifest = B._read_manifest(path, meta["version"])
-            on_disk = {
-                os.path.join(d, f)
-                for d in os.listdir(os.path.join(path, "data"))
-                for f in os.listdir(os.path.join(path, "data", d))
-            }
-            referenced = {
-                rel for rels in manifest["entries"].values() for rel in rels
-            }
-            assert on_disk == referenced
-
-
-def test_manifest_merge_carries_unchanged_files_untouched(spark, tmp_path):
-    """Manifest layout: an epoch merge must leave unchanged
-    partitions' FILES byte-identical (same names, same mtimes — no
-    rewrite, no re-link) and only replace the changed partitions'
-    manifest entries; point lookups read only the named partitions'
-    files."""
-    import os
-
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    def mk_df(rows):
-        return spark.createDataFrame(
-            rows, "user_id long, event_id long, value double"
-        )
-
-    n = 8
-    path = str(tmp_path / "snap")
-    base_rows = [(i, 100 + i, float(i)) for i in range(32)]
-    B.write_snapshot(
-        spark, mk_df(base_rows), path, n_key_files=n, layout="manifest"
-    )
-    meta = B._read_meta(path)
-    m1 = B._read_manifest(path, meta["version"])["entries"]
-
-    def file_state():
-        out = {}
-        for rels in B._read_manifest(path, B._read_meta(path)["version"])[
-            "entries"
-        ].values():
-            for rel in rels:
-                full = os.path.join(path, "data", rel)
-                out[rel] = (os.path.getmtime(full), os.path.getsize(full))
-        return out
-
-    before = file_state()
-    changes = mk_df([(3, 900, 3333.0)])
-    pids = B.snapshot_merge_targeted(spark, path, changes)
-    assert len(pids) == 1
-    after = file_state()
-    m2 = B._read_manifest(path, B._read_meta(path)["version"])["entries"]
-    # unchanged pids: identical entries AND identical files on disk
-    for p in m1:
-        if int(p) not in pids:
-            assert m2[p] == m1[p]
-            for rel in m1[p]:
-                assert after[rel] == before[rel]
-    # changed pid: new file names (immutable store, no in-place write)
-    for p in map(str, pids):
-        assert set(m2[p]).isdisjoint(set(m1.get(p, [])))
-
-    # content: equals base with the changed key replaced
-    got = {
-        r["user_id"]: (r["event_id"], r["value"])
-        for r in B.snapshot_read(spark, path).collect()
-    }
-    want = {r[0]: (r[1], r[2]) for r in base_rows}
-    want[3] = (900, 3333.0)
-    assert got == want
-
-    # lookup prunes at the driver: only the named pids' files are read
-    looked = B.snapshot_lookup(spark, path, "user_id", [3])
-    files_read = {
-        os.path.relpath(r["f"].replace("file://", ""), os.path.join(path, "data"))
-        for r in looked.select(
-            F.input_file_name().alias("f")
-        ).distinct().collect()
-    }
-    allowed = set(m2[str(pids[0])])
-    assert files_read <= allowed, (files_read, allowed)
-    assert {r["user_id"] for r in looked.collect()} == {3}
-
-
-def test_zorder_rank_buckets_spread_skewed_dimension(spark, tmp_path):
-    """On a heavily skewed dimension, equi-depth bucketization must
-    use far more distinct buckets than linear min/max scaling (whose
-    range is dominated by outliers), and the layout must still serve
-    box queries correctly."""
-    from kinesis_to_firehose_spark.sources.layout import (
-        _bucket_expr,
-        _rank_bucket_expr,
-    )
-
-    # skew: value**4 spreads 0..~1e12 with most mass near 0
-    e = (
-        load(spark, "events", "/root/testdata/sf0.01")
-        .select("event_id", "user_id", (F.col("value") ** 4).alias("v"))
-    )
-    st = e.agg(F.min("v").alias("mn"), F.max("v").alias("mx")).collect()[0]
-    linear = e.select(
-        _bucket_expr("v", float(st["mn"]), float(st["mx"])).alias("b")
-    )
-    ranked = e.select(_rank_bucket_expr(e, "v").alias("b"))
-    n_linear = linear.distinct().count()
-    n_ranked = ranked.distinct().count()
-    assert n_ranked > 2 * n_linear, (n_linear, n_ranked)
-    # buckets stay in range
-    mm = ranked.agg(F.min("b"), F.max("b")).collect()[0]
-    assert 0 <= mm[0] and mm[1] <= 255
-
-
-def test_zorder_3dim_prunes_third_dimension(spark, tmp_path):
-    """A (user, time, value) 3-dim Morton layout must prune a
-    value-band query that the 2-dim (user, time) layout cannot prune
-    at all, while returning identical rows."""
-    from kinesis_to_firehose_spark.sources.layout import (
-        candidate_files_for_preds,
-        write_zorder,
-    )
-
-    e = load(spark, "events", "/root/testdata/sf0.01").select(
-        "event_id", "user_id", "value",
-        F.unix_timestamp("ts").alias("ts_s"),
-    )
-    n_files = 16
-    p2 = str(tmp_path / "z2")
-    p3 = str(tmp_path / "z3")
-    write_zorder(e, "user_id", "ts_s", p2, n_files=n_files)
-    write_zorder(e, "user_id", "ts_s", p3, n_files=n_files, z="value")
-
-    v = e.agg(F.min("value"), F.max("value")).collect()[0]
-    # value is right-skewed: probe a HIGH band (top 30% of the range,
-    # ~1% of rows) — rare rows the 3-dim layout isolates into few
-    # files while the 2-dim layout scatters them across all of them
-    band = (v[0] + (v[1] - v[0]) * 0.7, v[1])
-    wide_u = e.agg(F.min("user_id"), F.max("user_id")).collect()[0]
-    wide_t = e.agg(F.min("ts_s"), F.max("ts_s")).collect()[0]
-    preds = {
-        "user_id": (wide_u[0], wide_u[1]),
-        "ts_s": (wide_t[0], wide_t[1]),
-        "value": band,
-    }
-    hit2, total2 = candidate_files_for_preds(spark, p2, preds)
-    hit3, total3 = candidate_files_for_preds(spark, p3, preds)
-    assert total2 == total3 == n_files
-    # the 2-dim layout gets no say over value (any pruning it shows is
-    # incidental correlation); the 3-dim layout must strictly beat it
-    assert hit3 < hit2, (hit3, hit2)
-
-    def band_rows(path):
-        return sorted(
-            r["event_id"]
-            for r in spark.read.parquet(path)
-            .filter((F.col("value") >= band[0]) & (F.col("value") <= band[1]))
-            .collect()
-        )
-
-    assert band_rows(p3) == band_rows(p2)
-
-
-def test_manifest_stats_sidecar_skips_files(spark, tmp_path):
-    """Footer-stats sidecar: a band scan on a NON-key column must skip
-    every file whose [min,max] range misses the band — at the driver,
-    before any file is opened — and still return exactly the rows a
-    full filtered read returns. Stats survive targeted merges."""
-    import os
-
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    n = 4
-    path = str(tmp_path / "snap")
-    # craft values so each partition file has a tight, distinct value
-    # range: value = pid * 100 + jitter
-    users = list(range(64))
-    pid_of = {
-        r["user_id"]: r["p"]
-        for r in spark.createDataFrame([(u,) for u in users], "user_id long")
-        .select("user_id", B._pid_expr("user_id", n).alias("p"))
-        .collect()
-    }
-    rows = [
-        (u, 100 + u, float(pid_of[u] * 100 + (u % 7))) for u in users
-    ]
-    df = spark.createDataFrame(rows, "user_id long, event_id long, value double")
-    B.write_snapshot(
-        spark, df, path, n_key_files=n, layout="manifest",
-        stats_cols=("value",),
-    )
-    meta = B._read_meta(path)
-    man = B._read_manifest(path, meta["version"])
-    assert man["stats"], "no stats recorded"
-    for s in man["stats"].values():
-        assert "value" in s
-
-    # band covering only pid 2's values
-    lo, hi = 195.0, 290.0
-    scan = B.snapshot_scan(spark, path, "value", lo, hi)
-    files_read = {
-        os.path.relpath(
-            r["f"].replace("file://", ""), os.path.join(path, "data")
-        )
-        for r in scan.select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    }
-    overlapping = {
-        rel
-        for rel, s in man["stats"].items()
-        if not (s["value"][1] < lo or s["value"][0] > hi)
-    }
-    assert files_read <= overlapping
-    assert len(overlapping) < sum(len(v) for v in man["entries"].values())
-
-    want = sorted(
-        (r[0], r[1], r[2]) for r in rows if lo <= r[2] <= hi
-    )
-    got = sorted(
-        (r["user_id"], r["event_id"], r["value"]) for r in scan.collect()
-    )
-    assert got == want
-
-    # merge a change into one partition: stats refresh for its new
-    # file, survive untouched elsewhere, and the scan stays correct
-    B.snapshot_merge_targeted(
-        spark, path, spark.createDataFrame(
-            [(users[0], 999, 205.0)], "user_id long, event_id long, value double"
-        )
-    )
-    man2 = B._read_manifest(path, B._read_meta(path)["version"])
-    assert man2["stats"]
-    got2 = {
-        (r["user_id"], r["event_id"])
-        for r in B.snapshot_scan(spark, path, "value", lo, hi).collect()
-    }
-    assert (users[0], 999) in got2
-
-
-@pytest.mark.parametrize("layout", ["dirs", "manifest"])
-def test_snapshot_time_travel_with_retention(spark, tmp_path, layout):
-    """keep_versions=2: after a merge, version N-1 still reads the
-    exact pre-merge content (immutable shared files) while the default
-    read sees the merge; after a second merge the oldest version falls
-    out of the window and reading it raises instead of silently
-    returning different data."""
-    import pytest as _pytest
-
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    def mk_df(rows):
-        return spark.createDataFrame(
-            rows, "user_id long, event_id long, value double"
-        )
-
-    def store(df):
-        return {r["user_id"]: r["value"] for r in df.collect()}
-
-    path = str(tmp_path / "snap")
-    base_rows = [(i, 100 + i, float(i)) for i in range(12)]
-    B.write_snapshot(
-        spark, mk_df(base_rows), path, n_key_files=4,
-        layout=layout, keep_versions=2,
-    )
-    v1 = B._read_meta(path)["version"]
-
-    B.snapshot_merge_targeted(spark, path, mk_df([(3, 900, 3333.0)]))
-    v2 = B._read_meta(path)["version"]
-    assert v2 == v1 + 1
-    # default read = merged; time travel = pre-merge, bit for bit
-    assert store(B.snapshot_read(spark, path))[3] == 3333.0
-    old = store(B.snapshot_read(spark, path, version=v1))
-    assert old[3] == 3.0 and len(old) == 12
-    # versioned point lookup sees the old value of the changed key
-    got = B.snapshot_lookup(spark, path, "user_id", [3], version=v1).collect()
-    assert [r["value"] for r in got] == [3.0]
-
-    B.snapshot_merge_targeted(spark, path, mk_df([(7, 901, 7777.0)]))
-    # window moved: v2 retained, v1 gone — and must say so loudly
-    assert store(B.snapshot_read(spark, path, version=v2))[7] == 7.0
-    assert store(B.snapshot_read(spark, path, version=v2))[3] == 3333.0
-    with _pytest.raises(ValueError, match="not retained"):
-        B.snapshot_read(spark, path, version=v1)
-    with _pytest.raises(ValueError, match="not retained"):
-        B.snapshot_lookup(spark, path, "user_id", [3], version=v1)
-
-
-@pytest.mark.parametrize("layout", ["dirs", "manifest"])
-def test_snapshot_schema_evolution_across_epochs(spark, tmp_path, layout):
-    """An epoch that adds a column merges cleanly: unchanged rows read
-    back with NULL in the new column, changed rows carry their value,
-    lookups on both old and new keys see the evolved schema, the meta
-    schema history records which columns each version has, and a
-    time-travel read of the pre-evolution version still has the OLD
-    schema."""
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    path = str(tmp_path / "snap")
-    base = spark.createDataFrame(
-        [(i, 100 + i, float(i)) for i in range(8)],
-        "user_id long, event_id long, value double",
-    )
-    B.write_snapshot(
-        spark, base, path, n_key_files=4, layout=layout, keep_versions=2
-    )
-    v1 = B._read_meta(path)["version"]
-
-    evolved = spark.createDataFrame(
-        [(3, 900, 3333.0, "gold")],
-        "user_id long, event_id long, value double, tier string",
-    )
-    B.snapshot_merge_targeted(spark, path, evolved)
-
-    out = {r["user_id"]: r for r in B.snapshot_read(spark, path).collect()}
-    assert out[3]["tier"] == "gold" and out[3]["value"] == 3333.0
-    assert out[5]["tier"] is None and out[5]["value"] == 5.0
-
-    look = B.snapshot_lookup(spark, path, "user_id", [3, 5]).collect()
-    assert {r["user_id"]: r["tier"] for r in look} == {3: "gold", 5: None}
-
-    meta = B._read_meta(path)
-    hist = meta["schema_history"]
-    assert "tier" not in hist[str(v1)] and "tier" in hist[str(v1 + 1)]
-
-    old_cols = set(B.snapshot_read(spark, path, version=v1).columns)
-    assert "tier" not in old_cols
-
-
-@pytest.mark.parametrize("layout", ["dirs", "manifest"])
-def test_snapshot_rebucket_preserves_content_and_versioned_lookups(
-    spark, tmp_path, layout
-):
-    """Re-bucketing 4 → 8 dirs keeps content identical, later merges
-    target the NEW bucket count, and a versioned lookup against the
-    pre-rebucket epoch prunes with the OLD bucket count (or it would
-    silently miss keys)."""
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    path = str(tmp_path / "snap")
-    base = spark.createDataFrame(
-        [(i, 100 + i, float(i)) for i in range(16)],
-        "user_id long, event_id long, value double",
-    )
-    B.write_snapshot(
-        spark, base, path, n_key_files=4, layout=layout, keep_versions=2
-    )
-    v1 = B._read_meta(path)["version"]
-
-    B.snapshot_rebucket(spark, path, 8)
-    meta = B._read_meta(path)
-    assert meta["n_key_files"] == 8
-    assert meta["bucket_history"][str(v1)] == 4
-
-    got = {
-        r["user_id"]: r["value"]
-        for r in B.snapshot_read(spark, path).collect()
-    }
-    assert got == {i: float(i) for i in range(16)}
-
-    # every key findable at the current version (new count) AND at the
-    # retained pre-rebucket version (old count)
-    for version in (None, v1):
-        vals = {
-            r["user_id"]: r["value"]
-            for r in B.snapshot_lookup(
-                spark, path, "user_id", list(range(16)), version=version
-            ).collect()
-        }
-        assert vals == got, f"version={version}"
-
-    # merges after the rebucket use the new layout
-    B.snapshot_merge_targeted(
-        spark, path, spark.createDataFrame(
-            [(3, 900, 3333.0)], "user_id long, event_id long, value double"
-        )
-    )
-    assert B.snapshot_lookup(spark, path, "user_id", [3]).collect()[0][
-        "value"
-    ] == 3333.0
 
 
 def test_export_corpus_partitioned_deterministic_with_manifest(
@@ -976,124 +233,6 @@ def test_register_views_sql_surface(spark):
     finally:
         # shared session: later tests must not silently resolve these
         unregister_views(spark)
-
-
-def test_zorder_scan_driver_side_file_skipping(spark, tmp_path):
-    """zorder_scan plans over only the footer-surviving files (fewer
-    than the directory's total for a selective box), never opens the
-    pruned ones, and returns exactly the full filtered read."""
-    import os
-
-    from kinesis_to_firehose_spark.sources.layout import (
-        candidate_files_for_preds,
-        write_zorder,
-        zorder_scan,
-    )
-
-    e = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .withColumn("ts_s", F.unix_timestamp("ts").cast("double"))
-        .select("event_id", "user_id", "ts_s", "value")
-    )
-    path = str(tmp_path / "z")
-    write_zorder(e, "user_id", "ts_s", path, n_files=16)
-
-    lo_u, hi_u = 10, 30
-    ts_med = e.selectExpr("percentile(ts_s, 0.5)").first()[0]
-    preds = {"user_id": (lo_u, hi_u), "ts_s": (ts_med, ts_med + 86400 * 3)}
-
-    n_cand, n_total = candidate_files_for_preds(spark, path, preds)
-    assert n_cand < n_total  # the box is genuinely selective
-
-    df = zorder_scan(spark, path, preds)
-    # planned files == the footer-surviving set, not the whole dir
-    planned = {
-        os.path.basename(f)
-        for f in df.inputFiles()
-    }
-    assert len(planned) == n_cand
-
-    full = (
-        spark.read.parquet(path)
-        .filter(
-            (F.col("user_id") >= lo_u) & (F.col("user_id") <= hi_u)
-            & (F.col("ts_s") >= preds["ts_s"][0])
-            & (F.col("ts_s") <= preds["ts_s"][1])
-        )
-    )
-    got = sorted(r["event_id"] for r in df.collect())
-    want = sorted(r["event_id"] for r in full.collect())
-    assert got == want and got
-
-
-@pytest.mark.parametrize("layout", ["dirs", "manifest"])
-def test_snapshot_diff_is_partition_skipping_and_exact(spark, tmp_path, layout):
-    """snapshot_diff between retained versions: reports exactly the
-    added/updated keys of the epoch, classifies a full-rewrite delete,
-    and — the O(changed) guarantee — partitions whose file identity is
-    shared across versions (manifest entry copies / hard-linked dirs)
-    are excluded from the read set at the driver."""
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    def mk_df(rows):
-        return spark.createDataFrame(
-            rows, "user_id long, event_id long, value double"
-        )
-
-    path = str(tmp_path / "snap")
-    n = 4
-    base = [(i, 100 + i, float(i)) for i in range(16)]
-    B.write_snapshot(
-        spark, mk_df(base), path, n_key_files=n, layout=layout,
-        keep_versions=3,
-    )
-    v1 = B._read_meta(path)["version"]
-
-    # epoch: update key 3, insert key 100
-    B.snapshot_merge_targeted(spark, path, mk_df([(3, 900, 3333.0), (100, 901, 42.0)]))
-    v2 = B._read_meta(path)["version"]
-
-    got = {r["user_id"]: r["change"] for r in B.snapshot_diff(spark, path, v1, v2).collect()}
-    assert got == {3: "updated", 100: "added"}
-
-    # the skipping claim: only the pids of the changed keys survive
-    meta = B._read_meta(path)
-    changed = B._diff_pid_files(path, meta, v1, v2)
-    expected_pids = {
-        r["p"]
-        for r in mk_df([(3, 0, 0.0), (100, 0, 0.0)])
-        .select(B._pid_expr("user_id", n).alias("p"))
-        .collect()
-    }
-    assert set(changed) == expected_pids
-    assert len(changed) < n + 1  # strictly fewer than all pids
-
-    # identical versions diff to empty without reading anything
-    assert B.snapshot_diff(spark, path, v2, v2).count() == 0
-
-    # a second epoch dropping key 5 via full rewrite → 'deleted'
-    rewrite = [r for r in base if r[0] not in (3, 5)] + [(3, 900, 3333.0), (100, 901, 42.0)]
-    B.write_snapshot(spark, mk_df(rewrite), path)
-    v3 = B._read_meta(path)["version"]
-    got3 = {r["user_id"]: r["change"] for r in B.snapshot_diff(spark, path, v2, v3).collect()}
-    assert got3 == {5: "deleted"}
-
-
-def test_snapshot_diff_empty_result_keeps_key_type(spark, tmp_path):
-    """An empty diff (identical versions) must carry the store's real
-    key type — here a STRING key — from the recorded meta, so unions
-    with non-empty diffs line up."""
-    import kinesis_to_firehose_spark.sources.bucketed as B
-
-    path = str(tmp_path / "snap")
-    df = spark.createDataFrame(
-        [(f"k{i}", float(i)) for i in range(8)], "sku string, value double"
-    )
-    B.write_snapshot(spark, df, path, key="sku", n_key_files=2, keep_versions=2)
-    v1 = B._read_meta(path)["version"]
-    out = B.snapshot_diff(spark, path, v1, v1)
-    assert out.count() == 0
-    assert dict(out.dtypes)["sku"] == "string"
 
 
 def test_dedup_index_continuous_ingest(spark, tmp_path):
@@ -1242,69 +381,6 @@ def test_route_stats_config_driven(spark):
     }
 
 
-def test_dedup_index_bloom_and_compaction(spark, tmp_path):
-    """Operational half of the index: (1) the bloom sidecar OR-merges
-    on append and the bloomed probe equals the plain probe
-    bit-for-bit (no false negatives — every exact dup still caught);
-    (2) compacting an epoch store to flat preserves probe results
-    while collapsing the epoch dirs."""
-    import os
-
-    from kinesis_to_firehose_spark.sources.dedup_index import (
-        attach_bloom,
-        build_dedup_index,
-        compact_dedup_index,
-        probe_dedup_index,
-        probe_dedup_index_bloomed,
-        read_bloom,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    d = load(spark, "documents", sf).select("doc_id", "text")
-    base = d.filter(F.col("doc_id") % 10 > 1)
-    b1 = d.filter(F.col("doc_id") % 10 == 1)
-    b2 = d.filter(F.col("doc_id") % 10 == 0)
-
-    # --- bloom on a flat store
-    flat = str(tmp_path / "flat")
-    build_dedup_index(spark, base, flat)
-    attach_bloom(spark, base, flat)
-    assert read_bloom(flat) is not None
-    plain = [tuple(r) for r in probe_dedup_index(spark, b2, flat).collect()]
-    bloomed = [
-        tuple(r)
-        for r in probe_dedup_index_bloomed(spark, b2, flat).collect()
-    ]
-    assert bloomed == plain
-    # append b1 and OR its bloom in: dups of b1 members must be caught
-    before = list(read_bloom(flat)["words"])
-    build_dedup_index(spark, b1, flat, mode="append")
-    attach_bloom(spark, b1, flat)
-    after = read_bloom(flat)["words"]
-    assert all((a & b) == b for a, b in zip(after, before))  # OR-merge
-    plain2 = [tuple(r) for r in probe_dedup_index(spark, b2, flat).collect()]
-    bloomed2 = [
-        tuple(r)
-        for r in probe_dedup_index_bloomed(spark, b2, flat).collect()
-    ]
-    assert bloomed2 == plain2
-
-    # --- compaction of an epoch store
-    ep = str(tmp_path / "ep")
-    build_dedup_index(spark, base, ep, epoch=0)
-    build_dedup_index(spark, b1, ep, epoch=1)
-    want = [tuple(r) for r in probe_dedup_index(spark, b2, ep).collect()]
-    n_files_before = sum(len(fs) for _, _, fs in os.walk(f"{ep}/fp"))
-    compact_dedup_index(spark, ep)
-    assert not any(
-        e.startswith("epoch=") for e in os.listdir(f"{ep}/fp")
-    )
-    got = [tuple(r) for r in probe_dedup_index(spark, b2, ep).collect()]
-    assert got == want
-    n_files_after = sum(len(fs) for _, _, fs in os.walk(f"{ep}/fp"))
-    assert n_files_after < n_files_before
-
-
 def test_cli_list_and_oracle(capsys):
     """CLI surface: `list` names every registry op with its oracle
     status, `oracle` prints the SQL twin, unknown ops exit 2 (no
@@ -1425,64 +501,6 @@ def test_hilbert_value_is_bijective_unit_step_and_beats_morton(spark):
         h_runs += runs([inv_h[c] for c in cells])
         m_runs += runs([morton(x, y) for x, y in cells])
     assert h_runs < m_runs  # the reason to pick Hilbert for layout
-
-
-def test_hilbert_layout_prunes_at_least_as_well_as_zorder(spark, tmp_path):
-    """Hilbert-clustered files must prune 2-D box queries at least as
-    well as the Morton layout on average (unit-step adjacency gives
-    each file a tighter min/max box), with identical query results."""
-    from kinesis_to_firehose_spark.sources.layout import (
-        candidate_files_for_box,
-        write_hilbert,
-        write_zorder,
-    )
-
-    e = load(spark, "events", "/root/testdata/sf0.01").select(
-        "event_id", "user_id", "ts", "value",
-        F.unix_timestamp("ts").alias("ts_s"),
-    )
-    n_files = 16
-    h_path = str(tmp_path / "hilbert")
-    z_path = str(tmp_path / "zorder")
-    write_hilbert(e, "user_id", "ts_s", h_path, n_files=n_files)
-    write_zorder(e, "user_id", "ts_s", z_path, n_files=n_files)
-
-    users = e.agg(F.min("user_id"), F.max("user_id")).collect()[0]
-    times = e.agg(F.min("ts_s"), F.max("ts_s")).collect()[0]
-    u_span = users[1] - users[0]
-    t_span = times[1] - times[0]
-    boxes = [
-        (
-            users[0] + u_span * a // 8,
-            users[0] + u_span * (a + 1) // 8,
-            times[0] + t_span * b // 4,
-            times[0] + t_span * (b + 2) // 4,
-        )
-        for a in (1, 4, 6)
-        for b in (0, 2)
-    ]
-    h_hits = z_hits = 0
-    for box in boxes:
-        h, ht = candidate_files_for_box(spark, h_path, "user_id", "ts_s", box)
-        z, zt = candidate_files_for_box(spark, z_path, "user_id", "ts_s", box)
-        assert ht == zt == n_files
-        h_hits += h
-        z_hits += z
-    assert h_hits <= z_hits, (h_hits, z_hits)
-
-    # correctness: identical rows through either layout
-    box = boxes[0]
-    def rows(path):
-        df = spark.read.parquet(path)
-        return sorted(
-            r["event_id"]
-            for r in df.filter(
-                (F.col("user_id") >= box[0]) & (F.col("user_id") <= box[1])
-                & (F.col("ts_s") >= box[2]) & (F.col("ts_s") <= box[3])
-            ).collect()
-        )
-
-    assert rows(h_path) == rows(z_path)
 
 
 def test_store_cache_digest_and_atomic_build(spark, tmp_path, monkeypatch):

@@ -821,6 +821,20 @@ def test_boto3_transport_sdk_retries_5xx_over_wire(monkeypatch):
         ep.close()
 
 
+_REFERENCE_ENV = {
+    "KINESIS_AWS_REGION": "us-east-1",
+    "KINESIS_STREAM_NAME": "in",
+    "KINESIS_APPLICATION_NAME": "app",
+    "KINESIS_INITIAL_POSITION": "LATEST",
+    "FIREHOSE_AWS_REGION": "eu-central-1",
+    "FIREHOSE_STREAM_NAME": "out",
+    "FIREHOSE_AWS_ENDPOINT": "http://localhost:4573",
+    "LOG_FILE": "/tmp/fail.log",
+    "READ_RATE_LIMIT": "100",
+    "_DEPLOY_ENV": "test",
+}
+
+
 def test_boto3_transport_client_knobs_match_reference():
     """The lazily-built boto3 client carries BOTH reference parity
     knobs (firehose_sender.go:47-50): retries max_attempts=10 at the
@@ -863,23 +877,59 @@ def test_boto3_transport_client_knobs_match_reference():
     assert len(built) == 1
 
     # endpoint + region plumb from the resolved env surface
-    env = {
-        "KINESIS_AWS_REGION": "us-east-1",
-        "KINESIS_STREAM_NAME": "in",
-        "KINESIS_APPLICATION_NAME": "app",
-        "KINESIS_INITIAL_POSITION": "LATEST",
-        "FIREHOSE_AWS_REGION": "eu-central-1",
-        "FIREHOSE_STREAM_NAME": "out",
-        "FIREHOSE_AWS_ENDPOINT": "http://localhost:4573",
-        "LOG_FILE": "/tmp/fail.log",
-        "READ_RATE_LIMIT": "100",
-        "_DEPLOY_ENV": "test",
-    }
-    cfg = config_from_env(env)
+    cfg = config_from_env(_REFERENCE_ENV)
     t2 = Boto3FirehoseTransport.from_config(cfg)
     kw2 = t2.client_kwargs()
     assert kw2["region_name"] == "eu-central-1"
     assert kw2["endpoint_url"] == "http://localhost:4573"
+
+
+def test_env_configured_transport_delivers_to_firehose_stream_name():
+    """firehose_sender.go:75 sends every batch to FIREHOSE_STREAM_NAME;
+    the per-type tag only groups records into batches."""
+    from kinesis_to_firehose_spark.streaming.config import config_from_env
+    from kinesis_to_firehose_spark.streaming.firehose import (
+        Boto3FirehoseTransport,
+    )
+
+    calls = []
+
+    class FakeClient:
+        def put_record_batch(self, DeliveryStreamName, Records):
+            calls.append(DeliveryStreamName)
+            return {"RequestResponses": [{"RecordId": "x"}] * len(Records)}
+
+    cfg = config_from_env({**_REFERENCE_ENV, "FIREHOSE_STREAM_NAME": "archive"})
+    t = Boto3FirehoseTransport.from_config(cfg, client=FakeClient())
+    assert t([b"x\n"], "click") == []
+    assert calls == ["archive"]
+
+
+def test_cli_consume_aws_resolves_env_before_spark(tmp_path, monkeypatch):
+    """`consume --aws` reads the reference's env surface and fails on a
+    missing variable with its error, before any Spark session starts."""
+    import kinesis_to_firehose_spark.__main__ as M
+    import kinesis_to_firehose_spark.session as S
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called before the env was resolved")
+
+    monkeypatch.setattr(S, "get_spark", no_spark)
+    for var, val in _REFERENCE_ENV.items():
+        monkeypatch.setenv(var, val)
+    monkeypatch.delenv("FIREHOSE_STREAM_NAME")
+    missing = "Must specify env variable FIREHOSE_STREAM_NAME"
+    with pytest.raises(ValueError, match=missing):
+        M.main(
+            [
+                "consume",
+                "--source-dir", str(tmp_path / "src"),
+                "--output-root", str(tmp_path / "out"),
+                "--checkpoint-dir", str(tmp_path / "ck"),
+                "--aws",
+                "--once",
+            ]
+        )
 
 
 def test_sdk_retry_budget_matches_reference_withmaxretries():
