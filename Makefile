@@ -4,7 +4,7 @@ SF_DIR ?= /root/testdata/sf0.1
 SEED ?= 1
 TRACE ?= 0
 
-.PHONY: test parity parity-sf1 parity-sf3 bench bench-sf1 scale-curve scale-curve-sf10 build-curve-sf30 forwarder-throughput perfbench digest image judge
+.PHONY: test parity parity-sf1 parity-sf3 bench bench-sf1 scale-curve scale-curve-sf10 build-curve-sf30 perfbench digest image judge
 
 test:
 	python -m pytest tests/ -x -q
@@ -75,11 +75,6 @@ digest:
 
 image:
 	docker build -t kinesis-to-firehose-spark .
-
-# end-to-end forwarder throughput (records/sec + MiB/sec, exactly-once
-# verified): writes FORWARDER_THROUGHPUT.json
-forwarder-throughput:
-	python tools/forwarder_throughput.py --mult 20
 
 # the repo benchmark (BENCHMARK.json): both forwarder workloads at the
 # benchmark's run length (TRACE=1 adds the per-layer metrics), then the

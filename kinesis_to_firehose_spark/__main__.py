@@ -52,8 +52,9 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="deliver every record to FIREHOSE_STREAM_NAME through "
         "boto3 PutRecordBatch (needs AWS credentials and the "
-        "reference's env variables, streaming/config.py REQUIRED_ENV; "
-        "default is the local-directory Firehose simulator)",
+        "reference's env variables, streaming/config.py REQUIRED_ENV, "
+        "which with --replay also set the read-rate limit and initial "
+        "position; default is the local-directory Firehose simulator)",
     )
     conp.add_argument(
         "--once",
@@ -108,28 +109,31 @@ def _consume(args) -> int:
     PutRecordBatch transport behind the identical seam — nothing
     downstream changes. Its region, endpoint and delivery stream come
     from the reference's env surface, resolved before Spark starts so
-    a missing variable fails at once (main.go:17-23)."""
+    a missing variable fails at once (main.go:17-23); with --replay the
+    same env sets the source's READ_RATE_LIMIT and initial position."""
     from kinesis_to_firehose_spark.streaming.pipeline import (
         PRODUCTION_TRIGGER,
         run_pipeline,
         run_pipeline_replay,
     )
 
-    transport_factory = None
+    transport_factory = source_config = None
     if args.aws:
         from kinesis_to_firehose_spark.streaming.config import config_from_env
         from kinesis_to_firehose_spark.streaming.firehose import (
             Boto3FirehoseTransport,
-            RetryingTransport,
         )
 
         cfg = config_from_env()
-        transport_factory = lambda epoch: RetryingTransport(  # noqa: E731
+        transport_factory = lambda epoch: (  # noqa: E731
             Boto3FirehoseTransport.from_config(cfg)
         )
+        source_config = cfg.source
     from kinesis_to_firehose_spark.session import get_spark
 
     spark = get_spark("kinesis-to-firehose-consume", cpus=args.cpus)
+    # the parquet file source has no rate limit or initial position
+    source_kwargs = {"source_config": source_config} if args.replay else {}
     run = run_pipeline_replay if args.replay else run_pipeline
     q = run(
         spark,
@@ -139,6 +143,7 @@ def _consume(args) -> int:
         dead_letter_dir=args.dead_letter_dir,
         transport_factory=transport_factory,
         trigger_processing_time=None if args.once else PRODUCTION_TRIGGER,
+        **source_kwargs,
     )
     if args.once:
         q.processAllAvailable()

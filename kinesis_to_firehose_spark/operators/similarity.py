@@ -2425,8 +2425,7 @@ def ann_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # centroids: rank-1 nearest-centroid assignment is the same formula
 # whether computed at build or at append, so the epoch store is an
 # implementation detail the results must not observe (store == direct
-# is pytest-pinned; epoch-replay convergence rides the streaming twin
-# run_ann_ingest_stream).
+# is pytest-pinned).
 # --------------------------------------------------------------------------
 ANN_NEW_MOD = 10  # vec_id % 10 == 0 → the "new" ingest batch
 ANN_PROBE_QBOUND = 300  # query slice: new vectors with vec_id < 300

@@ -249,9 +249,8 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality/lang/dup subplans on every run — 31 s of its sf10 wall —
     but the survivor set is a corpus property: one row per kept doc,
     no query parameters). `curate_corpus_plan` (unchanged) is the
-    BUILD step; this op plus curate_to_splits and export_corpus pay a
-    parquet scan. Store == direct is pinned by
-    tests/test_curation.py."""
+    BUILD step; this op and curate_to_splits pay a parquet scan.
+    Store == direct is pinned by tests/test_curation.py."""
     from kinesis_to_firehose_spark.sources.curation_store import (
         curated_corpus_store,
     )

@@ -140,8 +140,7 @@ def search_ann_index(
     exact-rescore, per-query top-k — the ann_ivf_topk contract with
     zero corpus-side recompute. `max_epoch` (epoch-layout stores
     only) pins the search to index state as of that epoch —
-    partition-pruned, later epochs' files are never opened (the
-    dedup probe_dedup_index contract, sources/dedup_index.py:240)."""
+    partition-pruned, later epochs' files are never opened."""
     from pyspark.sql.window import Window as W
 
     from kinesis_to_firehose_spark.operators.dedup import dot_expr
@@ -204,15 +203,14 @@ def build_ann_index_epoch(
     spark: SparkSession, vectors: DataFrame, path: str, epoch: int = 0
 ) -> None:
     """Epoch-layout ingest for the vector store (round-11, verdict
-    task 5 — the dedup index's build_dedup_index twin): epoch 0 is
+    task 5): epoch 0 is
     the base corpus and also freezes the codebook (seed centroids =
     the base batch's vec_id < N_CENTROIDS, the ann_ivf_topk
     convention); every later epoch assigns its batch against the
     STORED centroids — never re-clusters, never touches old vectors —
     and lands in its own `assignment/epoch=K/cell=…` partition dirs.
     Each epoch write is an OVERWRITE of that epoch's dir, so a
-    replayed micro-batch rewrites identical files (idempotent under
-    Structured Streaming redelivery). Assignment goes through the
+    replayed write rewrites identical files. Assignment goes through the
     `_assign_cells` Arrow kernel — the exact rounded-cosine/
     centroid-id tie-break the declarative path and the oracle use."""
     from kinesis_to_firehose_spark.operators.similarity import (
@@ -234,85 +232,3 @@ def build_ann_index_epoch(
     assigned.select("vec_id", "cell", "embedding", "nrm").write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(f"{path}/assignment/epoch={epoch}")
-
-
-def run_ann_ingest_stream(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Streaming continuous-ingest ANN maintenance — the vector-store
-    twin of run_dedup_ingest_stream (sources/dedup_index.py:273): a
-    file-stream of pre-normalized vector batches (parquet: vec_id,
-    embedding, nrm) is top-k-searched per micro-batch against the
-    epoch-layout index pinned at max_epoch=B (partition-pruned
-    pre-epoch view — a batch never matches itself through the store),
-    results land in `out_dir/epoch=B/`, then the batch appends itself
-    as index epoch B+1 through the FROZEN codebook. Both writes are
-    epoch-dir overwrites, so replays rewrite identical results —
-    idempotent end to end (replay convergence is pytest-asserted in
-    tests/test_streaming.py)."""
-
-    def handle(df: DataFrame, epoch_id: int) -> None:
-        # checkpoint/index alignment guard (ADVICE r11): the batch is
-        # about to append itself as index epoch epoch_id+1, which is
-        # only consistent if the store's current max epoch IS
-        # epoch_id. A fresh checkpoint dir pointed at an
-        # already-multi-epoch index (epoch_id restarts at 0) would
-        # otherwise silently overwrite epochs 1..N and pin searches
-        # below previously ingested vectors — fail loudly instead.
-        import re as _re
-
-        # Hadoop FileSystem listing, not local pathlib (ADVICE r12):
-        # for an hdfs:// / s3a:// / file: index_path a local glob
-        # silently returns nothing, so cur_max=0 and every resumed
-        # stream raises a spurious mismatch instead of being guarded.
-        jvm = spark._jvm
-        glob_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/assignment/epoch=*"
-        )
-        fs = glob_path.getFileSystem(spark._jsc.hadoopConfiguration())
-        statuses = fs.globStatus(glob_path)
-        epoch_dirs = [
-            int(m.group(1))
-            for st in (statuses or [])
-            if (m := _re.match(r"epoch=(\d+)$", st.getPath().getName()))
-        ]
-        cur_max = max(epoch_dirs) if epoch_dirs else 0
-        # cur_max == epoch_id     → normal append of the next epoch
-        # cur_max == epoch_id + 1 → replay of the last batch after a
-        #                           crash; the epoch-dir overwrite is
-        #                           idempotent by design
-        if cur_max not in (int(epoch_id), int(epoch_id) + 1):
-            raise RuntimeError(
-                f"ann ingest checkpoint/index mismatch: batch {epoch_id} "
-                f"would append epoch {int(epoch_id) + 1} but the index at "
-                f"{index_path} is at epoch {cur_max} — the checkpoint dir "
-                "does not belong to this index"
-            )
-        vecs = df.select("vec_id", "embedding", "nrm")
-        topk = search_ann_index(
-            spark, vecs, index_path, max_epoch=int(epoch_id)
-        )
-        topk.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-        build_ann_index_epoch(
-            spark, vecs, index_path, epoch=int(epoch_id) + 1
-        )
-
-    stream = (
-        spark.readStream.schema(
-            # array<float>: the embeddings table's native element type
-            # — epoch files must share one parquet physical type
-            "vec_id bigint, embedding array<float>, nrm double"
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle)
-        .start()
-    )

@@ -1,6 +1,6 @@
 """Persisted curation store — the curated-survivor table written once
 per corpus content, shared by every consumer of the curation verdict
-(curate_corpus, curate_to_splits, export_corpus).
+(curate_corpus, curate_to_splits).
 
 Same build/serve contract as the dedup stores (sources/dedup_index.py)
 and the ANN codebook (sources/ann_index.py): the quality-gate +

@@ -7,20 +7,10 @@ updated per ingest" the dedup_incremental docstring promises
 arriving batch, append the accepted batch — the index grows with the
 corpus, but no ingest ever re-signatures old documents.
 
-Two layouts, chosen at first write and then fixed per store:
+Layout (mode=overwrite builds, mode=append extends):
 
-  flat   path/fp     (doc_id, h)                  mode=overwrite/append
-         path/bands  (doc_id, band_idx, band_key)
-  epoch  path/fp/epoch=N/…, path/bands/epoch=N/…  (pass epoch=N)
-
-The epoch layout exists for STREAMING ingest: each micro-batch lands
-in its own Hive partition dir, and a replayed epoch OVERWRITES its
-own dirs instead of appending duplicates — the idempotent-sink trick
-the firehose sink already uses, applied to index maintenance. Probes
-against an epoch store can pin `max_epoch` so a retry that already
-appended its epoch still scores against the pre-epoch view (the
-filter is on the partition column — pruned at planning, dead epochs'
-files are never read).
+  path/fp     (doc_id, h)
+  path/bands  (doc_id, band_idx, band_key)
 
 At 100 TB: the build is one signature pass over the corpus (the same
 explode → min-hash aggregate every dedup op already pays ONCE, here
@@ -205,13 +195,9 @@ def build_dedup_index(
     docs: DataFrame,
     path: str,
     mode: str = "overwrite",
-    epoch: int | None = None,
 ) -> None:
     """Write (mode="overwrite") or extend (mode="append") the index
-    with `docs` (a documents-shaped DataFrame: doc_id, text). With
-    `epoch=N` the batch lands in its own `epoch=N` partition dirs
-    (overwrite — replay-idempotent); don't mix the two layouts in one
-    store."""
+    with `docs` (a documents-shaped DataFrame: doc_id, text)."""
     from kinesis_to_firehose_spark.operators.dedup import (
         doc_band_keys,
         doc_fingerprints,
@@ -219,16 +205,11 @@ def build_dedup_index(
 
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    fp_dir, band_dir = f"{path}/fp", f"{path}/bands"
-    if epoch is not None:
-        mode = "overwrite"
-        fp_dir, band_dir = (
-            f"{fp_dir}/epoch={epoch}",
-            f"{band_dir}/epoch={epoch}",
-        )
-    doc_fingerprints(docs).repartition("h").write.mode(mode).parquet(fp_dir)
+    doc_fingerprints(docs).repartition("h").write.mode(mode).parquet(
+        f"{path}/fp"
+    )
     doc_band_keys(docs).repartition("band_key").write.mode(mode).parquet(
-        band_dir
+        f"{path}/bands"
     )
 
 
@@ -236,71 +217,24 @@ def probe_dedup_index(
     spark: SparkSession,
     new_docs: DataFrame,
     path: str,
-    max_epoch: int | None = None,
 ) -> DataFrame:
     """Verdicts for a new batch against the stored index: (doc_id,
     is_exact_dup, n_near_candidates, verdict) — the dedup_incremental
     output contract, with the old side read from parquet instead of
-    recomputed. `max_epoch` (epoch-layout stores only) pins the probe
-    to index state as of that epoch — partition-pruned, so later
-    epochs' files are never opened."""
+    recomputed."""
     from kinesis_to_firehose_spark.operators.dedup import (
         doc_band_keys,
         doc_fingerprints,
         incremental_verdicts,
     )
 
-    old_fp = spark.read.parquet(f"{path}/fp")
-    old_bands = spark.read.parquet(f"{path}/bands")
-    if max_epoch is not None:
-        if "epoch" not in old_fp.columns:
-            raise ValueError(f"{path} is a flat store; max_epoch invalid")
-        old_fp = old_fp.filter(F.col("epoch") <= max_epoch)
-        old_bands = old_bands.filter(F.col("epoch") <= max_epoch)
     return incremental_verdicts(
         doc_fingerprints(new_docs),
         doc_band_keys(new_docs),
-        old_fp.select("doc_id", "h"),
-        old_bands.select("doc_id", "band_idx", "band_key"),
-    )
-
-
-def run_dedup_ingest_stream(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Streaming continuous-ingest dedup: a file-stream of document
-    batches (parquet: doc_id, text) is probed per micro-batch against
-    the epoch-layout index — verdicts land in `out_dir/epoch=B/`,
-    then the batch appends itself as index epoch B+1 (epoch 0 is the
-    pre-stream base corpus). Both writes are epoch-dir overwrites and
-    the probe pins max_epoch=B, so a replayed micro-batch rewrites
-    identical dirs and scores against the same pre-epoch index view —
-    idempotent end to end."""
-
-    def handle(df: DataFrame, epoch_id: int) -> None:
-        docs = df.select("doc_id", "text")
-        verdicts = probe_dedup_index(
-            spark, docs, index_path, max_epoch=int(epoch_id)
-        )
-        verdicts.write.mode("overwrite").parquet(
-            f"{out_dir}/epoch={epoch_id}"
-        )
-        build_dedup_index(spark, docs, index_path, epoch=int(epoch_id) + 1)
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle)
-        .start()
+        spark.read.parquet(f"{path}/fp").select("doc_id", "h"),
+        spark.read.parquet(f"{path}/bands").select(
+            "doc_id", "band_idx", "band_key"
+        ),
     )
 
 

@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kinesis_to_firehose_spark.functions.decode import decode_enhance, jsonl_line
-from kinesis_to_firehose_spark.streaming.firehose import firehose_foreach_batch
+from kinesis_to_firehose_spark.streaming.firehose import (
+    BATCH_INTERVAL_S,
+    firehose_foreach_batch,
+)
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -153,9 +156,10 @@ def decoded_stream(events: DataFrame) -> DataFrame:
 
 # Production trigger cadence — the reference's BatchInterval (main.go:48)
 # is the outer bound on delivery latency; a processingTime trigger is
-# Spark's equivalent knob. Tests pass trigger_processing_time=None so
-# processAllAvailable() drains micro-batches back-to-back.
-PRODUCTION_TRIGGER = "10 seconds"
+# Spark's equivalent knob, and the only place the interval applies.
+# Tests pass trigger_processing_time=None so processAllAvailable()
+# drains micro-batches back-to-back.
+PRODUCTION_TRIGGER = f"{BATCH_INTERVAL_S:g} seconds"
 
 
 def _start_forwarder(

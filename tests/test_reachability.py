@@ -44,11 +44,6 @@ KEEP = {
     "skewed_corpus": "adversarial-skew input generator for the dedup tests",
     "register_views": "spark.sql surface over the oracle table names",
     "unregister_views": "drops the views register_views made",
-    # pending ROADMAP item 4: wire into an op, the CLI or a tool, or delete
-    "run_ann_ingest_stream": "pending ROADMAP item 4",
-    "run_dedup_ingest_stream": "pending ROADMAP item 4",
-    "export_corpus": "pending ROADMAP item 4 (sources/export.py)",
-    "read_export": "pending ROADMAP item 4 (sources/export.py)",
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

@@ -122,84 +122,6 @@ def test_jsonl_read_captures_corrupt_records(spark, tmp_path):
         df.unpersist()
 
 
-def test_export_corpus_partitioned_deterministic_with_manifest(
-    spark, tmp_path
-):
-    """Corpus export: (split, lang) Hive partitions with deterministic
-    file names, a manifest whose per-partition doc/token counts match
-    both the files on disk and the curation summary, reads that prune
-    on the partition columns, and a re-export that reproduces the
-    identical tree."""
-    import json
-    import os
-
-    from kinesis_to_firehose_spark.registry import all_ops
-    from kinesis_to_firehose_spark.sources.export import (
-        export_corpus,
-        read_export,
-    )
-
-    out = str(tmp_path / "corpus")
-    manifest = export_corpus(spark, SF, out)
-    parts = manifest["partitions"]
-    assert parts and all(
-        k.startswith("split=") and "/lang=" in k for k in parts
-    )
-    # file names deterministic; every listed file exists
-    for key, p in parts.items():
-        assert p["files"] == [
-            f"part-{i:05d}.parquet" for i in range(len(p["files"]))
-        ]
-        for f in p["files"]:
-            assert os.path.isfile(os.path.join(out, key, f))
-
-    # manifest totals == the registry's curate_to_splits summary
-    summary = {
-        (r["split"], r["lang"]): (r["n_docs"], r["total_tokens"])
-        for r in all_ops()["curate_to_splits"].fn(spark, SF).collect()
-    }
-    got = {
-        tuple(s.split("=")[1] for s in key.split("/")): (
-            p["n_docs"],
-            p["n_tokens"],
-        )
-        for key, p in parts.items()
-    }
-    assert got == summary
-
-    # partition-pruned read returns exactly that partition's docs
-    some_split, some_lang = next(iter(summary))
-    n = read_export(spark, out, split=some_split, lang=some_lang).count()
-    assert n == summary[(some_split, some_lang)][0]
-    plan = read_export(
-        spark, out, split=some_split, lang=some_lang
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "split" in plan
-
-    # re-export: identical tree (names + manifest)
-    manifest2 = export_corpus(spark, SF, out)
-    assert manifest2 == manifest
-    with open(os.path.join(out, "_manifest.json")) as f:
-        assert json.load(f) == manifest
-
-    # files_per_partition actually fans out (salted repartition): the
-    # big train partitions must land in >1 file, and content is
-    # unchanged
-    out2 = str(tmp_path / "corpus2")
-    m2 = export_corpus(spark, SF, out2, files_per_partition=2)
-    assert any(
-        len(p["files"]) == 2
-        for key, p in m2["partitions"].items()
-        if key.startswith("split=train")
-    )
-    assert {
-        k: (p["n_docs"], p["n_tokens"]) for k, p in m2["partitions"].items()
-    } == {
-        k: (p["n_docs"], p["n_tokens"])
-        for k, p in manifest["partitions"].items()
-    }
-
-
 def test_register_views_sql_surface(spark):
     """spark.sql over the registered views computes the same result as
     the DataFrame op (TPC-H q6 shape), and the view scan keeps filter

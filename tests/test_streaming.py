@@ -100,6 +100,57 @@ def test_local_dir_transport_idempotent_epoch(tmp_path):
     assert len(read_delivered(root, "s")) == 1
 
 
+def test_deliver_partition_bounds_batches_per_stream():
+    """deliver_partition's own batching: one open batch per stream
+    tag, each sent in arrival order within the 500-record and 4 MiB
+    bounds, every open batch flushed at the end of the partition, and
+    a null line (an undecodable payload) skipped."""
+    from kinesis_to_firehose_spark.streaming.firehose import (
+        BATCH_SIZE,
+        deliver_partition,
+    )
+
+    def run(rows):
+        calls: list[tuple[str, list[bytes]]] = []
+
+        def transport(records, stream):
+            calls.append((stream, list(records)))
+            return []
+
+        stats = deliver_partition(
+            iter(rows), "stream", "line", lambda: transport, None,
+            sleep=lambda _s: None,
+        )
+        return calls, stats
+
+    rows = [{"stream": "a", "line": f"a{i}"} for i in range(1205)]
+    for pos, j in ((900, 2), (400, 1), (7, 0)):
+        rows.insert(pos, {"stream": "b", "line": f"b{j}"})
+    rows.insert(650, {"stream": None, "line": None})
+    calls, stats = run(rows)
+    assert [(s, len(recs)) for s, recs in calls] == [
+        ("a", 500), ("a", 500), ("a", 205), ("b", 3),
+    ]
+    assert [r for s, recs in calls if s == "a" for r in recs] == [
+        f"a{i}\n".encode() for i in range(1205)
+    ]
+    assert calls[-1][1] == [b"b0\n", b"b1\n", b"b2\n"]
+    assert (stats.batches, stats.records) == (4, 1208)
+
+    # ~9 KB lines: a batch closes on the 4 MiB bound before 500 records
+    big = [
+        {"stream": "a", "line": f"{i:04d}" + "x" * 8996} for i in range(1000)
+    ]
+    calls, _ = run(big)
+    sizes = [sum(len(r) for r in recs) for _, recs in calls]
+    assert [len(recs) for _, recs in calls] == [465, 465, 70]
+    assert all(n <= BATCH_SIZE for n in sizes)
+    assert sizes[0] + 9001 > BATCH_SIZE
+    assert [r for _, recs in calls for r in recs] == [
+        (row["line"] + "\n").encode() for row in big
+    ]
+
+
 # ---------------- end-to-end: stream → decode → deliver ----------------
 
 
@@ -252,41 +303,7 @@ def test_drop_stats_stream_views_match_batch(spark, tmp_path):
     assert got == want
 
 
-# ---------------- round-2: interval flush, trigger, task ids -----------
-
-
-def test_batch_interval_flushes_open_batch():
-    """main.go:48 BatchInterval parity: a batch open for 10 s flushes
-    even though the count/size bounds are unmet — driven by a fake
-    clock ticking 6 s per arriving row."""
-    from kinesis_to_firehose_spark.streaming.firehose import deliver_partition
-
-    calls: list[tuple[str, int]] = []
-
-    def transport(records, stream):
-        calls.append((stream, len(records)))
-        return []
-
-    now = [0.0]
-
-    def clock():
-        now[0] += 6.0
-        return now[0]
-
-    rows = [{"stream": "s", "line": f"r{i}"} for i in range(4)]
-    deliver_partition(
-        iter(rows),
-        "stream",
-        "line",
-        lambda: transport,
-        None,
-        sleep=lambda _s: None,
-        batch_interval_s=10.0,
-        clock=clock,
-    )
-    # rows arrive at t=6,12,18,24; the batch opened at t=6 expires at
-    # t=18 (r0,r1 flushed) and the rest flush at end-of-partition
-    assert calls == [("s", 2), ("s", 2)]
+# ---------------- round-2: trigger, task ids ---------------------------
 
 
 def _assert_trigger_drains(spark, tmp_path, source: str) -> None:
@@ -341,35 +358,6 @@ def test_sink_task_ids_deterministic_from_partition(spark, tmp_path):
             assert pat.match(name), name
             seen += 1
     assert seen > 0
-
-
-def test_retrying_transport_client_layer():
-    """firehose_sender.go:50 parity: whole-call failures retry at the
-    client layer (10 attempts); per-record failures pass through to
-    send_batch's loop untouched."""
-    from kinesis_to_firehose_spark.streaming.firehose import RetryingTransport
-
-    calls = {"n": 0}
-
-    def flaky_api(records, stream):
-        calls["n"] += 1
-        if calls["n"] < 4:
-            raise ConnectionError("throttled")
-        return [0]  # per-record failure passes through
-
-    sleeps: list[float] = []
-    t = RetryingTransport(flaky_api, sleep=sleeps.append)
-    assert t([b"a"], "s") == [0]
-    assert calls["n"] == 4
-    assert sleeps == [0.05, 0.1, 0.2]
-
-    def dead_api(records, stream):
-        raise ConnectionError("down")
-
-    t2 = RetryingTransport(dead_api, max_attempts=3, sleep=lambda _s: None)
-    with pytest.raises(ConnectionError):
-        t2([b"a"], "s")
-    assert t2.attempts_made == 3
 
 
 def test_kinesis_reader_options_wiring(spark):
@@ -451,91 +439,6 @@ def test_send_batch_eventual_delivery_or_dead_letter(fail_counts):
     assert delivered >= set(batch) - expected_dead
 
 
-def test_dedup_ingest_stream_probes_and_appends(spark, tmp_path):
-    """Streaming continuous-ingest dedup: each micro-batch's verdicts
-    must equal the from-scratch new-vs-old computation against the
-    index state BEFORE that batch, the batch must append itself as the
-    next index epoch, and a replayed epoch must rewrite identical
-    results (epoch-dir overwrite + max_epoch-pinned probe)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.operators.dedup import (
-        doc_band_keys,
-        doc_fingerprints,
-        incremental_verdicts,
-    )
-    from kinesis_to_firehose_spark.sources.dedup_index import (
-        build_dedup_index,
-        probe_dedup_index,
-        run_dedup_ingest_stream,
-    )
-    from kinesis_to_firehose_spark.sources.tables import load
-
-    sf = "/root/testdata/sf0.01"
-    d = load(spark, "documents", sf).select("doc_id", "text")
-    base = d.filter(F.col("doc_id") % 10 > 1)
-    b1 = d.filter(F.col("doc_id") % 10 == 1)
-    b2 = d.filter(F.col("doc_id") % 10 == 0)
-
-    index = str(tmp_path / "index")
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    build_dedup_index(spark, base, index, epoch=0)
-
-    b1.repartition(1).write.mode("overwrite").parquet(src)
-    q = run_dedup_ingest_stream(spark, src, index, out, ckpt)
-    q.processAllAvailable()
-    # second batch arrives after the first is fully ingested
-    b2.repartition(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    def expect(new, old):
-        return [
-            tuple(r)
-            for r in incremental_verdicts(
-                doc_fingerprints(new),
-                doc_band_keys(new),
-                doc_fingerprints(old),
-                doc_band_keys(old, checkpoint=True),
-            ).collect()
-        ]
-
-    got1 = [
-        tuple(r)
-        for r in spark.read.parquet(f"{out}/epoch=0")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    got2 = [
-        tuple(r)
-        for r in spark.read.parquet(f"{out}/epoch=1")
-        .orderBy("doc_id")
-        .collect()
-    ]
-    assert got1 == expect(b1, base)
-    assert got2 == expect(b2, base.unionByName(b1))
-
-    # index now holds epochs 0 (base), 1 (b1), 2 (b2)
-    epochs = sorted(
-        e for e in os.listdir(f"{index}/fp") if e.startswith("epoch=")
-    )
-    assert epochs == ["epoch=0", "epoch=1", "epoch=2"]
-
-    # simulated epoch replay: re-probing b2 pinned at epoch 1 ignores
-    # b2's own already-appended epoch and reproduces the same verdicts
-    replay = [
-        tuple(r)
-        for r in probe_dedup_index(spark, b2, index, max_epoch=1)
-        .orderBy("doc_id")
-        .collect()
-    ]
-    assert replay == got2
-
-
 def _assert_observed_metrics(spark, tmp_path, source: str) -> None:
     from pyspark.sql import functions as F
 
@@ -588,13 +491,14 @@ def test_pipeline_replay_observed_metrics(spark, tmp_path):
 
 def test_boto3_transport_maps_put_record_batch_contract():
     """Boto3FirehoseTransport speaks the same Transport contract as
-    the fakes — failed indices from RequestResponses' ErrorCode,
-    exceptions propagate to RetryingTransport — exercised through an
-    injected client (no boto3/network needed): the production seam
-    the reference wires at firehose_sender.go:47-52."""
+    the fakes — failed indices from RequestResponses' ErrorCode, an
+    API-call failure raised once (the SDK retried it already) and
+    turned into CatastrophicSendBatchError by send_batch — exercised
+    through an injected client (no network needed): the production
+    seam the reference wires at firehose_sender.go:47-52."""
     from kinesis_to_firehose_spark.streaming.firehose import (
         Boto3FirehoseTransport,
-        RetryingTransport,
+        CatastrophicSendBatchError,
         SendStats,
         send_batch,
     )
@@ -628,30 +532,34 @@ def test_boto3_transport_maps_put_record_batch_contract():
     assert t(recs, "s") == [1]  # index of the failed record
     # through the full stack: partial failure resends ONLY record 2
     calls.clear()
-    t2 = RetryingTransport(Boto3FirehoseTransport(client=FakeClient()))
+    t2 = Boto3FirehoseTransport(client=FakeClient())
     stats = SendStats()
     send_batch(t2, recs, "stream-1", stats, sleep=lambda s: None)
     assert calls[0] == ("stream-1", recs)
     assert calls[1] == ("stream-1", [recs[1]])
-    # API-call failure path: raised exceptions reach RetryingTransport
+
+    # API-call failure path: the raise leaves the transport after ONE
+    # client call (the botocore retryer sits inside the client) ...
     class BoomClient:
         def __init__(self):
             self.n = 0
 
         def put_record_batch(self, DeliveryStreamName, Records):
             self.n += 1
-            if self.n == 1:
-                raise ConnectionError("throttled")
-            return {
-                "FailedPutCount": 0,
-                "RequestResponses": [{"RecordId": "x"}] * len(Records),
-            }
+            raise ConnectionError("throttled")
 
-    t3 = RetryingTransport(
-        Boto3FirehoseTransport(client=BoomClient()), sleep=lambda s: None
-    )
-    assert t3(recs, "s") == []
-    assert t3.attempts_made == 2
+    boom = BoomClient()
+    with pytest.raises(ConnectionError):
+        Boto3FirehoseTransport(client=boom)(recs, "s")
+    assert boom.n == 1
+    # ... and send_batch classifies it as a whole-call failure
+    boom = BoomClient()
+    with pytest.raises(CatastrophicSendBatchError, match="throttled"):
+        send_batch(
+            Boto3FirehoseTransport(client=boom), recs, "s",
+            sleep=lambda s: None,
+        )
+    assert boom.n == 1
 
 
 class _FirehoseEndpoint:
@@ -739,7 +647,6 @@ def test_boto3_transport_against_wire_endpoint(monkeypatch):
     pytest.importorskip("boto3")
     from kinesis_to_firehose_spark.streaming.firehose import (
         Boto3FirehoseTransport,
-        RetryingTransport,
         SendStats,
         send_batch,
     )
@@ -773,8 +680,8 @@ def test_boto3_transport_against_wire_endpoint(monkeypatch):
     # 250 ms × 2^n loop resends ONLY that record, second call succeeds
     ep = _FirehoseEndpoint(script=[[1], []])
     try:
-        t2 = RetryingTransport(
-            Boto3FirehoseTransport(region_name="us-east-1", endpoint_url=ep.url)
+        t2 = Boto3FirehoseTransport(
+            region_name="us-east-1", endpoint_url=ep.url
         )
         stats = SendStats()
         send_batch(t2, recs, "stream-2", stats, sleep=lambda s: None)
@@ -866,12 +773,7 @@ def test_boto3_transport_client_knobs_match_reference():
     assert service == "firehose"
     assert kw["region_name"] == "us-west-2"
     assert kw["endpoint_url"] == "https://firehose.us-west-2.amazonaws.com"
-    retries = (
-        kw["config"]["retries"]
-        if isinstance(kw["config"], dict)  # no botocore in container
-        else kw["config"].retries
-    )
-    assert retries == {"max_attempts": 10, "mode": "standard"}
+    assert kw["config"].retries == {"max_attempts": 10, "mode": "standard"}
     # second call reuses the built client — still exactly one build
     t._cli()
     assert len(built) == 1
@@ -932,12 +834,60 @@ def test_cli_consume_aws_resolves_env_before_spark(tmp_path, monkeypatch):
         )
 
 
+def test_cli_consume_replay_aws_applies_env_source_config(
+    tmp_path, monkeypatch
+):
+    """`consume --replay --aws` hands the env's source settings
+    (READ_RATE_LIMIT, KINESIS_INITIAL_POSITION) to the replay source
+    and delivers through a bare boto3 transport."""
+    import kinesis_to_firehose_spark.__main__ as M
+    import kinesis_to_firehose_spark.session as S
+    import kinesis_to_firehose_spark.streaming.pipeline as P
+    from kinesis_to_firehose_spark.streaming.config import config_from_env
+    from kinesis_to_firehose_spark.streaming.firehose import (
+        Boto3FirehoseTransport,
+    )
+
+    for var, val in _REFERENCE_ENV.items():
+        monkeypatch.setenv(var, val)
+    seen = {}
+
+    class _Query:
+        def processAllAvailable(self):  # noqa: N802 — StreamingQuery API
+            pass
+
+        def stop(self):
+            pass
+
+    def fake_replay(spark, replay_dir, **kwargs):
+        seen.update(kwargs)
+        return _Query()
+
+    monkeypatch.setattr(S, "get_spark", lambda *a, **k: object())
+    monkeypatch.setattr(P, "run_pipeline_replay", fake_replay)
+    rc = M.main(
+        [
+            "consume",
+            "--replay",
+            "--aws",
+            "--once",
+            "--source-dir", str(tmp_path / "src"),
+            "--output-root", str(tmp_path / "out"),
+            "--checkpoint-dir", str(tmp_path / "ck"),
+        ]
+    )
+    assert rc == 0
+    assert seen["source_config"] == config_from_env().source
+    assert seen["source_config"].read_rate_limit == 100
+    assert isinstance(seen["transport_factory"](0), Boto3FirehoseTransport)
+
+
 def test_sdk_retry_budget_matches_reference_withmaxretries():
     """firehose_sender.go:48 configures the AWS SDK client with
     WithMaxRetries(10); the boto3 transport's DEFAULT retry budget must
     equal that value — not merely be configurable to it (round-7
-    verdict task 6). Distinct from RetryingTransport's per-record
-    partial-failure loop (firehose_sender.go:93-134, 5 retries)."""
+    verdict task 6). Distinct from send_batch's per-record
+    partial-failure loop (firehose_sender.go:93-134)."""
     from kinesis_to_firehose_spark.streaming.firehose import (
         Boto3FirehoseTransport,
     )
@@ -1205,73 +1155,3 @@ def test_dead_letters_exactly_once_under_epoch_replay(spark, tmp_path):
     ids = _delivered_ids(out)
     assert len(ids) == len(rows) - 1
     assert set(ids) == {json.loads(data)["event_id"] for _, data in rows[1:]}
-
-
-def test_ann_ingest_stream_probes_and_appends(spark, tmp_path):
-    """Streaming continuous-ingest ANN maintenance (the vector-store
-    twin of the dedup ingest stream): each micro-batch's top-k must
-    equal a fresh store search PINNED at the pre-batch epoch (so a
-    batch never matches itself through the store), the batch must
-    append itself as the next index epoch through the frozen codebook,
-    and the pinned re-probe doubles as the replay-convergence check —
-    every write is an epoch-dir overwrite."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.operators.dedup import normed_embeddings
-    from kinesis_to_firehose_spark.sources.ann_index import (
-        build_ann_index_epoch,
-        run_ann_ingest_stream,
-        search_ann_index,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    n = normed_embeddings(spark, sf).select("vec_id", "embedding", "nrm")
-    base = n.filter(F.col("vec_id") % 10 > 1)
-    b1 = n.filter(F.col("vec_id") % 10 == 1)
-    b2 = n.filter(F.col("vec_id") % 10 == 0)
-
-    index = str(tmp_path / "index")
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    build_ann_index_epoch(spark, base, index, epoch=0)
-
-    b1.repartition(1).write.mode("overwrite").parquet(src)
-    q = run_ann_ingest_stream(spark, src, index, out, ckpt)
-    q.processAllAvailable()
-    # second batch arrives after the first is fully ingested
-    b2.repartition(1).write.mode("append").parquet(src)
-    q.processAllAvailable()
-    q.stop()
-
-    got1 = sorted(
-        tuple(r) for r in spark.read.parquet(f"{out}/epoch=0").collect()
-    )
-    got2 = sorted(
-        tuple(r) for r in spark.read.parquet(f"{out}/epoch=1").collect()
-    )
-    assert got1 and got2
-
-    # index now holds epochs 0 (base), 1 (b1), 2 (b2)
-    epochs = sorted(
-        e
-        for e in os.listdir(f"{index}/assignment")
-        if e.startswith("epoch=")
-    )
-    assert epochs == ["epoch=0", "epoch=1", "epoch=2"]
-
-    # pinned re-probes reproduce each batch's emitted results exactly:
-    # batch 1 scored against the base only, batch 2 against base+b1 —
-    # b2's own already-appended epoch is partition-pruned away. This
-    # is also the replay contract: a redelivered micro-batch recomputes
-    # the identical rows and overwrites the identical dirs.
-    replay1 = sorted(
-        tuple(r)
-        for r in search_ann_index(spark, b1, index, max_epoch=0).collect()
-    )
-    replay2 = sorted(
-        tuple(r)
-        for r in search_ann_index(spark, b2, index, max_epoch=1).collect()
-    )
-    assert got1 == replay1
-    assert got2 == replay2
