@@ -2642,7 +2642,7 @@ def epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # explode + groupBy over a broadcast-sized table. The loop follows the
 # graph_pagerank unroll pattern: a bounded number of rounds, each a
 # declarative plan with the 1-row argmax broadcast-cross-joined in and
-# a localCheckpoint lineage cut — no per-round driver collect of data
+# a localCheckpoint plan cut — no per-round driver collect of data
 # rows.
 #
 # Determinism contract (both engines, any partitioning): pair counts

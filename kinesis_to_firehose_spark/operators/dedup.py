@@ -580,7 +580,7 @@ def minhash_lsh_pairs(
 
     Signatures are materialized via localCheckpoint: the band self-join
     plus the signature rejoin would otherwise recompute the whole
-    shingle→signature chain 4× through the lineage. Unlike `persist()`
+    shingle→signature chain 4× through the plan. Unlike `persist()`
     (whose blocks live in the CacheManager until an explicit
     unpersist — a leak across repeated invocations), localCheckpoint
     blocks are released by the ContextCleaner as soon as the DataFrame
@@ -2105,7 +2105,7 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline: candidate PAIRS (minhash est_jaccard ≥ τ) → dup CLUSTERS,
 # as min-label propagation over the pair graph. Each iteration is a
 # join of the current labels with the edge list plus a min-aggregate,
-# localCheckpointed to cut the iterative lineage; the loop exits as
+# localCheckpointed to truncate the iterative plan; the loop exits as
 # soon as an iteration changes nothing (cluster diameter bounds the
 # count — near-dup clusters are short chains, so 2-4 iterations in
 # practice; a 100 TB run on adversarial chain-shaped graphs would
@@ -2907,7 +2907,7 @@ def dedup_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # forest — 36s at sf3, the largest wall on SCALE_CURVE): the mapping
 # doc → (ancestor at distance d) is composed with ITSELF each round,
 # so reach doubles — ⌈log₂ depth⌉ self-joins of a table bounded by the
-# duplicate-doc count, each localCheckpoint-ed so lineage stays flat.
+# duplicate-doc count, each localCheckpoint-ed so the plan stays flat.
 # The DuckDB oracle keeps the readable recursive-CTE definition; both
 # compute root = deepest ancestor and depth = chain length, exact
 # integers, so results agree bit-for-bit.

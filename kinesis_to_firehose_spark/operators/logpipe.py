@@ -249,7 +249,7 @@ def stats_views(pre: DataFrame) -> DataFrame:
 
     Single GROUPING SETS aggregation — ((minute,app), (minute,level),
     (minute)) — instead of a 4-branch union: each union branch would
-    replay the pre-agg lineage (4 raw scans) unless the intermediate
+    replay the pre-agg plan (4 raw scans) unless the intermediate
     is checkpointed, and the checkpoint itself costs a job per call.
     The Expand tripling happens on the already-aggregated rows
     (minutes × apps × levels), not the raw log, so the extra rows are
@@ -465,7 +465,7 @@ def route_stats(
     configured (route, series, stat_type, minute, value) gauge rows.
     One pass over the emissions regardless of route count — the
     previous per-route filter+union replayed the full drop-stats
-    lineage (raw scan + grouping sets) once per route, 2.2× the
+    plan (raw scan + grouping sets) once per route, 2.2× the
     baseline at sf0.1 and N scans of the log at 100 TB."""
     spark = emissions.sparkSession
     rt = F.broadcast(

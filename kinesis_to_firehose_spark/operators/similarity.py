@@ -385,7 +385,7 @@ def train_ivf_centroids(
     hence oracle-able) — ONE shuffle per iteration (the cell groupBy,
     map-side combined), 64 sums instead of an explode. Cells that lose all
     members keep their previous centroid. The centroid set stays tiny,
-    so each iteration's result is localCheckpointed to cut the lineage
+    so each iteration's result is localCheckpointed to cut the plan
     (otherwise iteration k replays all k-1 predecessors).
     """
     n = prenormed if prenormed is not None else normed_embeddings(spark, sf_dir)
@@ -819,7 +819,7 @@ def semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: per iteration one (ranks ⋈ edges) equi-join + one
 # groupBy-dst shuffle over the EDGE list (≤ K·|V| rows), the node
 # update is a broadcast of two 1-row scalars; iterations are
-# lineage-cut so the plan stays constant-depth. That is textbook
+# checkpoint-cut so the plan stays constant-depth. That is textbook
 # distributed PageRank — nothing touches the corpus beyond |V|.
 # --------------------------------------------------------------------------
 PAGERANK_ITERS = 5
@@ -889,7 +889,7 @@ ORDER BY vec_id
 
 @register("graph_pagerank", _pagerank_sql())
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the knn store scan is already a lineage cut — no checkpoint
+    # the knn store scan is already a plan cut — no checkpoint
     edges = knn_graph(spark, sf_dir).select("src", "neighbor")
     nodes = load(spark, "embeddings", sf_dir).select(
         F.col("vec_id").alias("v")

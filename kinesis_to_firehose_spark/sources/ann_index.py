@@ -132,15 +132,12 @@ def search_ann_index(
     spark: SparkSession,
     queries: DataFrame,
     path: str,
-    max_epoch: int | None = None,
 ) -> DataFrame:
     """Multi-probe IVF search against the STORE: queries (vec_id,
     embedding, nrm) rank the stored centroids (broadcast), probe
     their N_PROBE nearest cells via the partition-pruned equi-join,
     exact-rescore, per-query top-k — the ann_ivf_topk contract with
-    zero corpus-side recompute. `max_epoch` (epoch-layout stores
-    only) pins the search to index state as of that epoch —
-    partition-pruned, later epochs' files are never opened."""
+    zero corpus-side recompute."""
     from pyspark.sql.window import Window as W
 
     from kinesis_to_firehose_spark.operators.dedup import dot_expr
@@ -151,10 +148,6 @@ def search_ann_index(
 
     cents = spark.read.parquet(f"{path}/centroids")
     stored = spark.read.parquet(f"{path}/assignment")
-    if max_epoch is not None:
-        if "epoch" not in stored.columns:
-            raise ValueError(f"{path} is a flat store; max_epoch invalid")
-        stored = stored.filter(F.col("epoch") <= max_epoch)
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),

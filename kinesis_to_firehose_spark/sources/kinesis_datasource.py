@@ -15,10 +15,12 @@ connector contract:
   EXECUTORS (the scale shape of the real connector: reader
   parallelism == shard count, like one KCL record-processor per
   shard);
-- the stream reader's offsets are `{shard_id: next_sequence_number}`
-  dicts, JSON-checkpointed by Structured Streaming exactly like
-  Kinesis sequence-number checkpoints in the KCL lease table — a
-  restart resumes from the committed offset with no re-delivery;
+- the stream reader's offsets are `{shard_id: [next_line,
+  next_byte]}` dicts, JSON-checkpointed by Structured Streaming
+  exactly like Kinesis sequence-number checkpoints in the KCL lease
+  table — a restart resumes from the committed offset with no
+  re-delivery; a consumer with no checkpoint starts at
+  `initialPosition` TRIM_HORIZON (default) or LATEST;
 - `latestOffset` scans only the bytes APPENDED since the previous
   poll (offsets carry byte positions; the driver seeks, never
   rescans history) and offers only \\n-terminated records, so a
@@ -26,9 +28,12 @@ connector contract:
   parsing happens only in `read()` on executors.
 
 Layout: `<path>/shard-<i>.jsonl`, one record per line; the line
-number IS the sequence number. `write_replay_slices` is the producer
-half (partition_key → shard via md5, mirroring Kinesis's
-hash-key-range routing).
+number IS the sequence number. The shard set is fixed when a producer
+first writes the stream: `write_replay_slices` (and its distributed
+twin) is the producer half (partition_key → shard via md5 mod the
+shard count, mirroring Kinesis's hash-key-range routing). Shard
+handling a real deployment needs (resharding, lease balancing) comes
+from the spark-sql-kinesis connector, not from this simulator.
 """
 
 from __future__ import annotations
@@ -55,151 +60,15 @@ REPLAY_SCHEMA = (
     "data string"
 )
 
+# the initialPositionInStream values the simulator serves
+INITIAL_POSITIONS = ("TRIM_HORIZON", "LATEST")
+
 
 def shard_for_key(partition_key: str, n_shards: int) -> int:
     """Kinesis routes by md5 of the partition key over the hash-key
     range; mod over the md5 prefix is the same stable routing."""
     h = int(hashlib.md5(partition_key.encode()).hexdigest()[:8], 16)
     return h % n_shards
-
-
-# --------------------------------------------------------------------------
-# Resharding (round-7 verdict task 3). The real KCL tracks shard
-# lineage — a split/merge CLOSES the parent shard(s) at SHARD_END and
-# opens children owning the parents' hash-key ranges, and a compliant
-# consumer must checkpoint a parent through SHARD_END before touching
-# its children (amazon-kinesis-client shard-sync; the reference runs
-# it via run_kcl.sh's MultiLangDaemon under main.go:49). The simulator
-# models that with a `_shards.json` lineage file next to the logs:
-#
-#   {"next_id": N, "shards": {"shard-0": {"lo": 0, "hi": 2**31,
-#       "parents": [], "status": "OPEN" | "CLOSED"}, ...}}
-#
-# Streams CREATED with a lineage file route records by HASH RANGE
-# (each open shard owns [lo, hi) of the 32-bit md5 space — a key that
-# routed to a parent routes to exactly one of its children after the
-# split, which is what makes per-key order across lineage possible).
-# Legacy streams without the file keep the original mod routing and
-# never reshard. A CLOSED shard's log never grows again: its current
-# complete length IS its SHARD_END.
-# --------------------------------------------------------------------------
-LINEAGE_FILE = "_shards.json"
-HASH_SPACE = 1 << 32
-
-
-def _key_hash(partition_key: str) -> int:
-    return int(hashlib.md5(partition_key.encode()).hexdigest()[:8], 16)
-
-
-def _lineage_path(path: str) -> str:
-    return os.path.join(path, LINEAGE_FILE)
-
-
-def load_lineage(path: str) -> dict | None:
-    fp = _lineage_path(path)
-    if not os.path.exists(fp):
-        return None
-    with open(fp) as f:
-        return json.load(f)
-
-
-def _save_lineage(path: str, lin: dict) -> None:
-    # write-then-rename: a reader polling mid-reshard sees either the
-    # old or the new lineage, never a torn file
-    tmp = _lineage_path(path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(lin, f)
-    os.rename(tmp, _lineage_path(path))
-
-
-def create_stream(path: str, n_shards: int = 4) -> None:
-    """Create a RESHARDABLE stream: n equal hash-range shards plus the
-    lineage file. Streams made by bare write_replay_slices (no
-    lineage) stay on legacy mod routing and cannot split/merge."""
-    os.makedirs(path, exist_ok=True)
-    shards = {}
-    for i in range(n_shards):
-        lo = HASH_SPACE * i // n_shards
-        hi = HASH_SPACE * (i + 1) // n_shards
-        shards[f"shard-{i}"] = {
-            "lo": lo, "hi": hi, "parents": [], "status": "OPEN"
-        }
-        open(os.path.join(path, f"shard-{i}.jsonl"), "a").close()
-    _save_lineage(path, {"next_id": n_shards, "shards": shards})
-
-
-def split_shard(path: str, parent: str) -> tuple[str, str]:
-    """SplitShard: close `parent` at its current end (SHARD_END) and
-    open two children each owning half its hash range. Returns the
-    child shard names. New records for the parent's keys route to
-    exactly one child from now on."""
-    lin = load_lineage(path)
-    if lin is None:
-        raise ValueError(
-            f"{path} has no lineage file; create_stream() it first"
-        )
-    meta = lin["shards"].get(parent)
-    if meta is None or meta["status"] != "OPEN":
-        raise ValueError(f"cannot split {parent}: missing or CLOSED")
-    mid = (meta["lo"] + meta["hi"]) // 2
-    if mid in (meta["lo"], meta["hi"]):
-        raise ValueError(f"{parent} hash range too narrow to split")
-    kids = []
-    for lo, hi in ((meta["lo"], mid), (mid, meta["hi"])):
-        name = f"shard-{lin['next_id']}"
-        lin["next_id"] += 1
-        lin["shards"][name] = {
-            "lo": lo, "hi": hi, "parents": [parent], "status": "OPEN"
-        }
-        open(os.path.join(path, f"{name}.jsonl"), "a").close()
-        kids.append(name)
-    meta["status"] = "CLOSED"
-    _save_lineage(path, lin)
-    return kids[0], kids[1]
-
-
-def merge_shards(path: str, a: str, b: str) -> str:
-    """MergeShards: close two ADJACENT open shards and open one child
-    owning their union range. Returns the child shard name."""
-    lin = load_lineage(path)
-    if lin is None:
-        raise ValueError(
-            f"{path} has no lineage file; create_stream() it first"
-        )
-    ma, mb = lin["shards"].get(a), lin["shards"].get(b)
-    for name, m in ((a, ma), (b, mb)):
-        if m is None or m["status"] != "OPEN":
-            raise ValueError(f"cannot merge {name}: missing or CLOSED")
-    if ma["hi"] != mb["lo"] and mb["hi"] != ma["lo"]:
-        raise ValueError(
-            f"{a} {ma['lo']}..{ma['hi']} and {b} {mb['lo']}..{mb['hi']} "
-            "are not adjacent"
-        )
-    name = f"shard-{lin['next_id']}"
-    lin["next_id"] += 1
-    lin["shards"][name] = {
-        "lo": min(ma["lo"], mb["lo"]),
-        "hi": max(ma["hi"], mb["hi"]),
-        "parents": [a, b],
-        "status": "OPEN",
-    }
-    open(os.path.join(path, f"{name}.jsonl"), "a").close()
-    ma["status"] = "CLOSED"
-    mb["status"] = "CLOSED"
-    _save_lineage(path, lin)
-    return name
-
-
-def _route(lin: dict, partition_key: str) -> str:
-    """The OPEN shard owning this key's hash (ranges partition the
-    space, so exactly one owns it)."""
-    h = _key_hash(partition_key)
-    for name, m in lin["shards"].items():
-        if m["status"] == "OPEN" and m["lo"] <= h < m["hi"]:
-            return name
-    raise ValueError(
-        f"no OPEN shard owns hash {h} — corrupt lineage file"
-    )
 
 
 def write_replay_slices(
@@ -209,31 +78,17 @@ def write_replay_slices(
 ) -> None:
     """Producer half: append (partition_key, data) records to their
     shards' JSONL logs. Append-only — repeated calls extend the
-    stream, which is what the stream reader's offsets track. On a
-    lineage-tracked stream (create_stream) records route by HASH
-    RANGE over the OPEN shards — after a split, a parent's keys land
-    on its children; legacy streams keep mod routing."""
+    stream, which is what the stream reader's offsets track."""
     os.makedirs(path, exist_ok=True)
-    lin = load_lineage(path)
-    by_shard: dict[str, list[tuple[str, str]]] = {}
+    by_shard: dict[int, list[tuple[str, str]]] = {}
     for pk, data in records:
-        name = (
-            _route(lin, pk)
-            if lin is not None
-            else f"shard-{shard_for_key(pk, n_shards)}"
-        )
-        by_shard.setdefault(name, []).append((pk, data))
-    for shard, recs in by_shard.items():
-        with open(os.path.join(path, f"{shard}.jsonl"), "a") as f:
-            for pk, data in recs:
-                f.write(json.dumps({"pk": pk, "data": data}) + "\n")
-    # shards with no records yet still need their log to exist so the
+        by_shard.setdefault(shard_for_key(pk, n_shards), []).append((pk, data))
+    # every shard's log is opened, even one with no records yet, so the
     # reader's shard discovery is stable from the first batch
-    if lin is None:
-        for shard in range(n_shards):
-            p = os.path.join(path, f"shard-{shard}.jsonl")
-            if not os.path.exists(p):
-                open(p, "a").close()
+    for shard in range(n_shards):
+        with open(os.path.join(path, f"shard-{shard}.jsonl"), "a") as f:
+            for pk, data in by_shard.get(shard, ()):
+                f.write(json.dumps({"pk": pk, "data": data}) + "\n")
 
 
 def write_replay_slices_distributed(
@@ -411,31 +266,21 @@ class KinesisReplayStreamReader(DataSourceStreamReader):
         # like the KCL lease table overriding the configured position.
         #   TRIM_HORIZON (default): oldest record of every shard.
         #   LATEST: only records appended after the stream starts.
-        #   AT_SEQUENCE_NUMBER: per-shard start at startingSequenceNumber
-        #     (a single int for all shards, or a JSON {shard: seq} map);
-        #     a seq past the current end clamps to the current end.
-        self.initial_position = (
-            options.get("initialposition", "TRIM_HORIZON").upper()
-        )
-        raw_seq = options.get("startingsequencenumber", "0")
-        self._start_seq = (
-            json.loads(raw_seq) if raw_seq.lstrip().startswith("{")
-            else int(raw_seq)
-        )
+        # The value arrives from outside (KINESIS_INITIAL_POSITION), so
+        # a typo fails here instead of replaying the whole stream.
+        raw = options.get("initialposition", "TRIM_HORIZON")
+        self.initial_position = raw.upper()
+        if self.initial_position not in INITIAL_POSITIONS:
+            raise ValueError(
+                f"initialPosition {raw!r} is not one of: "
+                + ", ".join(INITIAL_POSITIONS)
+            )
         # maxRecordsPerShardPerTrigger: admission cap per shard per
         # micro-batch — the maxOffsetsPerTrigger analogue that ENFORCES
         # the reference's READ_RATE_LIMIT (main.go:52) at the source
         # instead of merely accounting overage after the fact.
         cap = options.get("maxrecordspershardpertrigger")
         self.max_per_trigger = int(cap) if cap is not None else None
-        # shards: comma-separated shard-name lease — this reader owns
-        # ONLY these shards (KCL worker lease assignment; two workers
-        # with disjoint leases consume disjoint shard subsets).
-        lease = options.get("shards")
-        self._lease = (
-            {s.strip() for s in lease.split(",") if s.strip()}
-            if lease else None
-        )
         # driver-side poll cache: {shard: (line, byte)} — the position
         # the last returned offset reached, which the admission cap
         # advances from. Seeded by _initial_pos on a fresh stream and
@@ -448,73 +293,18 @@ class KinesisReplayStreamReader(DataSourceStreamReader):
         # a LATEST-position log may grow between the two calls; both
         # must agree or the first batch's bounds would be inverted.
         self._init_cache: dict[str, tuple[int, int]] = {}
-        # SHARD_END cache for CLOSED shards (their logs never grow
-        # again, so one scan per run suffices) — the resharding gate's
-        # "parent fully consumed" test reads from here.
-        self._closed_end: dict[str, tuple[int, int]] = {}
-        # shard set at the run's first poll: a shard discovered LATER
-        # was created mid-run (a reshard child) and its records are
-        # all post-start, so even a LATEST consumer reads it from its
-        # beginning — Kinesis LATEST skips pre-start records, not
-        # records of shards born after the start.
+        # shard set at the run's first poll: a shard whose log appears
+        # LATER (a consumer started before the producer created the
+        # stream) holds only post-start records, so even a LATEST
+        # consumer reads it from its beginning — Kinesis LATEST skips
+        # pre-start records, not records of shards born after the start
+        # — and the admission cap counts its first offers from there.
         self._start_shards: set[str] | None = None
-
-    def _shard_end(self, shard: str) -> tuple[int, int]:
-        if shard not in self._closed_end:
-            fp = os.path.join(self.path, f"{shard}.jsonl")
-            self._closed_end[shard] = _scan_complete(fp, 0, 0)
-        return self._closed_end[shard]
-
-    def _gated_by_lineage(
-        self, shard: str, lin: dict | None, pos_before: dict
-    ) -> bool:
-        """Resharding gate (KCL shard-sync semantics: a consumer must
-        checkpoint a parent through SHARD_END before reading its
-        children). True while any of this shard's parents still has
-        unconsumed records AS OF THE PREVIOUS trigger — the strict
-        form, so a parent's final records and its child's first
-        records never share a micro-batch and per-key order across
-        the lineage is delivery order. Parents outside this reader's
-        lease are skipped: lease assignment is expected to hand a
-        child to the worker that finished its parent (KCL does the
-        same via lease coordination)."""
-        if lin is None:
-            return False
-        meta = lin["shards"].get(shard)
-        if not meta or not meta["parents"]:
-            return False
-        for p in meta["parents"]:
-            if self._lease is not None and p not in self._lease:
-                continue
-            pmeta = lin["shards"].get(p, {})
-            if pmeta.get("status") != "CLOSED":
-                return True  # parent still open: child can't have data yet
-            consumed = pos_before.get(p) or self._initial_pos(p)
-            if consumed[0] < self._shard_end(p)[0]:
-                return True
-        return False
 
     def _shards(self) -> list[str]:
         if not os.path.isdir(self.path):
             return []
-        files = _shard_files(self.path)
-        if self._lease is not None:
-            files = [f for f in files if f[: -len(".jsonl")] in self._lease]
-        return files
-
-    def _seek_seq(self, fp: str, seq: int) -> tuple[int, int]:
-        """Byte position of sequence number `seq` (= line number) in a
-        shard log, clamped to the current end: one bounded forward
-        scan, only at stream START (never on the per-trigger path)."""
-        line, byte = 0, 0
-        with open(fp, "rb") as f:
-            while line < seq:
-                raw = f.readline()
-                if not raw.endswith(b"\n"):
-                    break  # fewer complete records than seq: clamp
-                line += 1
-                byte += len(raw)
-        return line, byte
+        return _shard_files(self.path)
 
     def _initial_pos(self, shard: str) -> tuple[int, int]:
         """Where a consumer with NO checkpoint starts on this shard
@@ -522,31 +312,14 @@ class KinesisReplayStreamReader(DataSourceStreamReader):
         and cached so initialOffset() and the first latestOffset()
         fallback agree exactly."""
         if shard not in self._init_cache:
-            fp = os.path.join(self.path, f"{shard}.jsonl")
             born_mid_run = (
                 self._start_shards is not None
                 and shard not in self._start_shards
             )
-            # a reshard child whose parent this run already tracks
-            # (checkpoint-seeded) was created after the consumer
-            # started — even across a restart — so LATEST must not
-            # skip its records
-            if not born_mid_run and self.initial_position == "LATEST":
-                lin = load_lineage(self.path)
-                meta = (lin or {}).get("shards", {}).get(shard, {})
-                born_mid_run = any(
-                    p in self._pos for p in meta.get("parents", [])
-                )
             if self.initial_position == "LATEST" and not born_mid_run:
+                fp = os.path.join(self.path, f"{shard}.jsonl")
                 pos = _scan_complete(fp, 0, 0)
-            elif self.initial_position == "AT_SEQUENCE_NUMBER":
-                seq = (
-                    self._start_seq.get(shard, 0)
-                    if isinstance(self._start_seq, dict)
-                    else self._start_seq
-                )
-                pos = self._seek_seq(fp, int(seq))
-            else:  # TRIM_HORIZON
+            else:  # TRIM_HORIZON, or a shard born after the start
                 pos = (0, 0)
             self._init_cache[shard] = pos
         return self._init_cache[shard]
@@ -567,11 +340,6 @@ class KinesisReplayStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         out = {}
         self._note_start_shards()
-        lin = load_lineage(self.path)
-        # gate decisions read the PRE-POLL positions: a child opens on
-        # the trigger AFTER its parent reached SHARD_END, never in the
-        # same micro-batch as the parent's final records
-        pos_before = dict(self._pos)
         for f in self._shards():
             shard = f[: -len(".jsonl")]
             if shard not in self._pos:
@@ -583,47 +351,19 @@ class KinesisReplayStreamReader(DataSourceStreamReader):
                 # cache with the checkpointed position, so this
                 # branch never rewinds past a checkpoint.
                 self._pos[shard] = self._initial_pos(shard)
-            line, byte = self._pos[shard]
-            if self._gated_by_lineage(shard, lin, pos_before):
-                # hold at the current position — no records offered
-                # until every parent is checkpoint-complete
-                out[shard] = [line, byte]
-                continue
             line, byte = _scan_complete(
-                os.path.join(self.path, f), line, byte,
+                os.path.join(self.path, f), *self._pos[shard],
                 max_lines=self.max_per_trigger,
             )
             self._pos[shard] = (line, byte)
             out[shard] = [line, byte]
         return out
 
-    def _coerce(self, shard: str, off) -> tuple[int, int]:
-        """Accept both offset formats: [line, byte] (current) and a
-        bare line count (pre-byte-offset checkpoints) — an upgraded
-        reader must still resume a checkpoint the old one wrote. The
-        legacy form pays one bounded scan to recover the byte
-        position of that line."""
-        if isinstance(off, (list, tuple)):
-            return int(off[0]), int(off[1])
-        line = int(off)
-        byte = 0
-        fp = os.path.join(self.path, f"{shard}.jsonl")
-        if line > 0 and os.path.exists(fp):
-            with open(fp, "rb") as f:
-                for _ in range(line):
-                    raw = f.readline()
-                    if not raw:
-                        break
-                    byte += len(raw)
-        return line, byte
-
     def partitions(self, start: dict, end: dict) -> list[ShardSlice]:
         out = []
         for shard, end_off in end.items():
-            end_line, end_byte = self._coerce(shard, end_off)
-            start_line, start_byte = self._coerce(
-                shard, start.get(shard, [0, 0])
-            )
+            end_line, end_byte = end_off
+            start_line, start_byte = start.get(shard, (0, 0))
             if end_line < start_line:
                 # offsets are monotone by construction; a backward
                 # range means the offset log and the reader disagree —
@@ -687,66 +427,6 @@ class KinesisReplayDataSource(DataSource):
         return KinesisReplayStreamReader(self.options)
 
 
-def orphaned_lease_positions(checkpoint_dir: str) -> dict[str, int]:
-    """Lease takeover (the KCL failover the reference consumer relies
-    on — consumer.properties.template failoverTimeMillis/workerId:
-    when a worker dies, another adopts its shard leases FROM THE
-    LEASE-TABLE CHECKPOINTS): per-shard next-record positions of a
-    dead consumer's lease, recovered from its Spark checkpoint.
-
-    Reads the offset entry of the last COMMITTED batch — a batch
-    present in offsets/ but missing from commits/ was planned but
-    never fully delivered by the dead worker, so the adopter must
-    re-read it (same rule Spark itself applies on restart). Feed the
-    result to a takeover reader on a FRESH checkpoint:
-
-        pos = orphaned_lease_positions(dead_ck)
-        spark.readStream.format("kinesis_replay")
-             .option("shards", ",".join(pos))
-             .option("initialPosition", "AT_SEQUENCE_NUMBER")
-             .option("startingSequenceNumber", json.dumps(pos))
-
-    Returns {} when the dead worker never committed a batch (adopt
-    from the configured initial position instead). Exactly-once union
-    across the dead worker's output and the adopter's is pytest-
-    asserted (test_datasource.py lease-takeover case)."""
-    commits_dir = os.path.join(checkpoint_dir, "commits")
-    if not os.path.isdir(commits_dir):
-        return {}
-    committed = [int(f) for f in os.listdir(commits_dir) if f.isdigit()]
-    if not committed:
-        return {}
-    off_file = os.path.join(
-        checkpoint_dir, "offsets", str(max(committed))
-    )
-    with open(off_file) as f:
-        lines = f.read().splitlines()
-    # line 1: "v1"; line 2: batch metadata; line 3: this source's
-    # offset json — {shard: [next_line, next_byte]}. Validate the
-    # layout instead of trusting lines[2] blindly: a multi-source
-    # query or an offset-log format drift would otherwise misparse
-    # SILENTLY (json.loads of the wrong source's line) rather than
-    # failing loudly (ADVICE r7).
-    if not lines:
-        raise ValueError(f"empty offset log {off_file}")
-    if lines[0] != "v1":
-        raise ValueError(
-            f"unsupported offset-log version in {off_file}: "
-            f"expected first line 'v1', got {lines[0]!r}"
-        )
-    if len(lines) != 3:
-        raise ValueError(
-            f"offset log {off_file} has {len(lines) - 2} source lines; "
-            "orphaned_lease_positions supports exactly one source per "
-            "query (v1 layout: version, metadata, one offset line)"
-        )
-    offsets = json.loads(lines[2])
-    return {
-        shard: (pos[0] if isinstance(pos, list) else int(pos))
-        for shard, pos in offsets.items()
-    }
-
-
 def register_replay_source(spark) -> None:
     """Make `.format("kinesis_replay")` resolvable on this session."""
     spark.dataSource.register(KinesisReplayDataSource)
@@ -757,26 +437,19 @@ def records_behind_latest(path: str, end_offset: dict) -> dict[str, int]:
     MillisBehindLatest (the one KCL observability surface without a
     twin until round 10): how many COMPLETE records each shard log
     holds beyond the position a batch consumed through. end_offset is
-    the source's committed offset dict ({shard: [line, byte]}, or the
-    legacy bare line count); shards present in the log directory but
-    absent from the offset (not yet consumed at all) report their full
-    record count. O(delta) per shard — the scan seeks to the consumed
-    byte and counts only unread records."""
+    the source's committed offset dict ({shard: [line, byte]});
+    shards present in the log directory but absent from the offset
+    (not yet consumed at all) report their full record count.
+    O(delta) per shard — the scan seeks to the consumed byte and
+    counts only unread records."""
     out: dict[str, int] = {}
     if not os.path.isdir(path):
         return out
     for f in _shard_files(path):
         shard = f[: -len(".jsonl")]
-        fp = os.path.join(path, f)
-        off = end_offset.get(shard, [0, 0])
-        if isinstance(off, (list, tuple)):
-            line, byte = int(off[0]), int(off[1])
-            end_line, _ = _scan_complete(fp, line, byte)
-            out[shard] = end_line - line
-        else:  # legacy bare-line offsets carry no byte: count from 0
-            line = int(off)
-            end_line, _ = _scan_complete(fp, 0, 0)
-            out[shard] = max(end_line - line, 0)
+        line, byte = end_offset.get(shard, (0, 0))
+        end_line, _ = _scan_complete(os.path.join(path, f), line, byte)
+        out[shard] = end_line - line
     return out
 
 

@@ -194,17 +194,19 @@ def test_torn_tail_line_is_deferred_until_terminated(spark, tmp_path):
         q.awaitTermination()
 
 
-def test_consumer_first_stream_idles_until_shards_appear(spark, tmp_path):
-    """A stream started before the producer creates the directory must
-    idle (not fail) and pick up records once shards appear."""
+def _consumer_first_stream(spark, tmp_path, **options):
+    """Start a stream before the producer creates the directory: it
+    must idle (not fail), then deliver each of the 20 records written
+    afterwards exactly once, within the admission cap if one is set."""
     d = str(tmp_path / "not-yet")
     ck = str(tmp_path / "ck")
     out = str(tmp_path / "out")
     register_replay_source(spark)
+    reader = spark.readStream.format("kinesis_replay").option("path", d)
+    for k, v in options.items():
+        reader = reader.option(k, v)
     q = (
-        spark.readStream.format("kinesis_replay")
-        .option("path", d)
-        .load()
+        reader.load()
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ck)
@@ -215,31 +217,59 @@ def test_consumer_first_stream_idles_until_shards_appear(spark, tmp_path):
         assert q.isActive
         write_replay_slices(d, _records(0, 20), n_shards=2)
         _drain(q)
-        assert spark.read.parquet(out).count() == 20
+        got = spark.read.parquet(out)
+        assert got.count() == 20
+        assert {r["data"] for r in got.collect()} == {
+            f"payload-{i}" for i in range(20)
+        }
+        cap = options.get("maxRecordsPerShardPerTrigger")
+        if cap is not None:
+            rows = [p["numInputRows"] for p in q.recentProgress]
+            assert max(rows) <= 2 * int(cap), rows  # 2 shards
     finally:
         q.stop()
         q.awaitTermination()
 
 
-def test_stream_reader_accepts_legacy_int_offsets(spark, tmp_path):
-    """Pre-byte-offset checkpoints stored bare line counts; the
-    upgraded reader must resume them (coercing the legacy form to a
-    [line, byte] slice) rather than failing on unpack."""
+def test_consumer_first_stream_idles_until_shards_appear(spark, tmp_path):
+    """A stream started before the producer creates the directory must
+    idle (not fail) and pick up records once shards appear."""
+    _consumer_first_stream(spark, tmp_path)
+
+
+def test_consumer_first_latest_reads_shards_born_after_start(
+    spark, tmp_path
+):
+    """Under LATEST, a shard first seen after the run's first poll
+    holds only post-start records, so it is read from its start:
+    Kinesis LATEST skips records written before the consumer started,
+    not shards created after it. Nothing written after the start is
+    lost, and the new shards' first offers respect the admission cap
+    (a shard positioned at its end would offer its whole log at once)."""
+    _consumer_first_stream(
+        spark,
+        tmp_path,
+        initialPosition="LATEST",
+        maxRecordsPerShardPerTrigger="3",
+    )
+
+
+def test_unknown_initial_position_is_rejected(tmp_path):
+    """initialPosition comes from outside (KINESIS_INITIAL_POSITION):
+    a typo fails at reader construction, naming the bad value and the
+    accepted ones, instead of replaying the whole stream as
+    TRIM_HORIZON. The value is case-insensitive."""
+    import pytest
+
     from kinesis_to_firehose_spark.sources.kinesis_datasource import (
         KinesisReplayStreamReader,
     )
 
     d = str(tmp_path / "stream")
-    write_replay_slices(d, [(f"k", f"p{i}") for i in range(10)], n_shards=1)
-    r = KinesisReplayStreamReader({"path": d})
-    latest = r.latestOffset()
-    parts = r.partitions({"shard-0": 4}, latest)  # legacy int start
-    rows = [row for p in parts for row in r.read(p)]
-    assert sorted(row[1] for row in rows) == list(range(4, 10))
-    # legacy int END offsets (an uncommitted replayed batch) coerce too
-    parts = r.partitions({"shard-0": 0}, {"shard-0": 7})
-    rows = [row for p in parts for row in r.read(p)]
-    assert sorted(row[1] for row in rows) == list(range(0, 7))
+    with pytest.raises(ValueError, match=r"'LASTEST'.*TRIM_HORIZON, LATEST"):
+        KinesisReplayStreamReader({"path": d, "initialposition": "LASTEST"})
+    r = KinesisReplayStreamReader({"path": d, "initialposition": "latest"})
+    assert r.initial_position == "LATEST"
 
 
 def test_latest_initial_position_skips_history(spark, tmp_path):
@@ -301,49 +331,6 @@ def test_latest_initial_position_skips_history(spark, tmp_path):
         q.awaitTermination()
 
 
-def test_at_sequence_number_initial_position(spark, tmp_path):
-    """AT_SEQUENCE_NUMBER start: per-shard offsets begin at the
-    requested sequence number; a seq past the current end clamps to
-    the end (records before it never surface)."""
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        KinesisReplayStreamReader,
-    )
-
-    d = str(tmp_path / "stream")
-    write_replay_slices(d, [("k", f"p{i}") for i in range(10)], n_shards=1)
-    r = KinesisReplayStreamReader(
-        {
-            "path": d,
-            "initialposition": "AT_SEQUENCE_NUMBER",
-            "startingsequencenumber": "4",
-        }
-    )
-    init = r.initialOffset()
-    assert init["shard-0"][0] == 4
-    rows = [
-        row
-        for p in r.partitions(init, r.latestOffset())
-        for row in r.read(p)
-    ]
-    assert sorted(row[1] for row in rows) == list(range(4, 10))
-
-    # per-shard JSON map form + clamp beyond end
-    r2 = KinesisReplayStreamReader(
-        {
-            "path": d,
-            "initialposition": "AT_SEQUENCE_NUMBER",
-            "startingsequencenumber": '{"shard-0": 99}',
-        }
-    )
-    init2 = r2.initialOffset()
-    assert init2["shard-0"][0] == 10  # clamped to current end
-    assert r2.partitions(init2, r2.latestOffset()) and not [
-        row
-        for p in r2.partitions(init2, r2.latestOffset())
-        for row in r2.read(p)
-    ]
-
-
 def test_read_rate_limit_enforced_per_trigger(spark, tmp_path):
     """READ_RATE_LIMIT (main.go:52) ENFORCED at the source: with
     maxRecordsPerShardPerTrigger=5 no micro-batch admits more than 5
@@ -403,148 +390,6 @@ def test_read_rate_limit_enforced_per_trigger(spark, tmp_path):
     finally:
         q.stop()
         q.awaitTermination()
-
-
-def test_two_reader_lease_disjoint_shards_union_exactly_once(spark, tmp_path):
-    """KCL multi-worker lease semantics (consumer.properties.template
-    failoverTimeMillis/workerId): two concurrent readers with DISJOINT
-    shard leases reconstruct the stream exactly once — Spark's
-    scheduler is the lease manager, a `shards` lease is the
-    worker-assignment analogue."""
-    d = str(tmp_path / "stream")
-    write_replay_slices(d, _records(0, 100), n_shards=N_SHARDS)
-    register_replay_source(spark)
-
-    def start(worker, lease):
-        return (
-            spark.readStream.format("kinesis_replay")
-            .option("path", d)
-            .option("shards", lease)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / f"out-{worker}"))
-            .option("checkpointLocation", str(tmp_path / f"ck-{worker}"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-
-    qa = start("a", "shard-0,shard-1")
-    qb = start("b", "shard-2,shard-3")
-    try:
-        _drain(qa)
-        _drain(qb)
-        a = spark.read.parquet(str(tmp_path / "out-a"))
-        b = spark.read.parquet(str(tmp_path / "out-b"))
-        # disjoint leases: no shard appears in both workers' output
-        assert {r["shard_id"] for r in a.select("shard_id").distinct().collect()} == {
-            "shard-0",
-            "shard-1",
-        }
-        assert {r["shard_id"] for r in b.select("shard_id").distinct().collect()} == {
-            "shard-2",
-            "shard-3",
-        }
-        union = a.unionByName(b)
-        assert union.count() == 100
-        assert union.select("data").distinct().count() == 100
-        # lease failover: worker B takes over A's shards from A's
-        # checkpoint — new appends on shards 0/1 arrive exactly once
-        write_replay_slices(d, _records(100, 140), n_shards=N_SHARDS)
-        _drain(qa)
-        _drain(qb)
-        union = spark.read.parquet(str(tmp_path / "out-a")).unionByName(
-            spark.read.parquet(str(tmp_path / "out-b"))
-        )
-        assert union.count() == 140
-        assert union.select("data").distinct().count() == 140
-    finally:
-        qa.stop()
-        qb.stop()
-        qa.awaitTermination()
-        qb.awaitTermination()
-
-
-def test_lease_takeover_adopts_orphaned_shards_exactly_once(spark, tmp_path):
-    """Dynamic lease failover (round-6 verdict residual 3 — the KCL
-    behavior consumer.properties.template's failoverTimeMillis/workerId
-    section configures): worker A dies mid-stream; a takeover reader
-    adopts A's shards FROM A'S CHECKPOINTED OFFSETS
-    (orphaned_lease_positions) on a fresh checkpoint, while worker B
-    keeps its own lease — the union of dead-A + takeover + B output is
-    the whole stream exactly once."""
-    import json
-
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        orphaned_lease_positions,
-    )
-
-    d = str(tmp_path / "stream")
-    write_replay_slices(d, _records(0, 100), n_shards=N_SHARDS)
-    register_replay_source(spark)
-
-    def start(worker, lease, **opts):
-        r = (
-            spark.readStream.format("kinesis_replay")
-            .option("path", d)
-            .option("shards", lease)
-        )
-        for k, v in opts.items():
-            r = r.option(k, v)
-        return (
-            r.load()
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / f"out-{worker}"))
-            .option("checkpointLocation", str(tmp_path / f"ck-{worker}"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-
-    qa = start("a", "shard-0,shard-1")
-    qb = start("b", "shard-2,shard-3")
-    try:
-        _drain(qa)
-        _drain(qb)
-    finally:
-        qa.stop()
-        qa.awaitTermination()  # worker A is DEAD from here on
-    try:
-        # records appended AFTER A died — its shards are orphaned
-        write_replay_slices(d, _records(100, 160), n_shards=N_SHARDS)
-        pos = orphaned_lease_positions(str(tmp_path / "ck-a"))
-        assert set(pos) == {"shard-0", "shard-1"}
-        # takeover: fresh checkpoint, A's lease, start AT the dead
-        # worker's committed positions
-        qt = start(
-            "takeover",
-            ",".join(sorted(pos)),
-            initialPosition="AT_SEQUENCE_NUMBER",
-            startingSequenceNumber=json.dumps(pos),
-        )
-        try:
-            _drain(qt)
-            _drain(qb)
-        finally:
-            qt.stop()
-            qt.awaitTermination()
-        union = (
-            spark.read.parquet(str(tmp_path / "out-a"))
-            .unionByName(spark.read.parquet(str(tmp_path / "out-takeover")))
-            .unionByName(spark.read.parquet(str(tmp_path / "out-b")))
-        )
-        assert union.count() == 160, "lost or duplicated records"
-        assert union.select("data").distinct().count() == 160
-        # the takeover saw ONLY A's shards, and only the post-death delta
-        t = spark.read.parquet(str(tmp_path / "out-takeover"))
-        assert {
-            r["shard_id"] for r in t.select("shard_id").distinct().collect()
-        } == {"shard-0", "shard-1"}
-        dead_a = spark.read.parquet(str(tmp_path / "out-a"))
-        assert t.count() + dead_a.count() == union.filter(
-            F.col("shard_id").isin("shard-0", "shard-1")
-        ).count()
-    finally:
-        qb.stop()
-        qb.awaitTermination()
 
 
 def test_distributed_slice_write_order_is_deterministic(spark, tmp_path):
@@ -616,318 +461,6 @@ def test_replay_options_derive_from_env_surface():
     assert "maxRecordsPerShardPerTrigger" not in cfg3.replay_options()
 
 
-# ------------------------------------------------------------------ reshard
-
-
-def _lineage_stream(tmp_path, n_shards=2):
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        create_stream,
-    )
-
-    d = str(tmp_path / "stream")
-    create_stream(d, n_shards=n_shards)
-    return d
-
-
-def test_split_routing_halves_parent_range(tmp_path):
-    """Producer-side lineage semantics: a split CLOSES the parent and
-    its keys route to exactly one of the two children afterwards;
-    splitting a CLOSED shard or merging non-adjacent shards raises."""
-    import pytest as _pytest
-
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        _key_hash,
-        _route,
-        create_stream,
-        load_lineage,
-        merge_shards,
-        split_shard,
-    )
-
-    d = str(tmp_path / "stream")
-    create_stream(d, n_shards=2)
-    lin = load_lineage(d)
-    pre = {f"key-{i}": _route(lin, f"key-{i}") for i in range(200)}
-    kid_a, kid_b = split_shard(d, "shard-0")
-    lin2 = load_lineage(d)
-    assert lin2["shards"]["shard-0"]["status"] == "CLOSED"
-    p0 = lin2["shards"]["shard-0"]
-    for kid in (kid_a, kid_b):
-        m = lin2["shards"][kid]
-        assert m["parents"] == ["shard-0"]
-        assert p0["lo"] <= m["lo"] < m["hi"] <= p0["hi"]
-    for key, shard in pre.items():
-        now = _route(lin2, key)
-        if shard == "shard-0":
-            assert now in (kid_a, kid_b)
-            m = lin2["shards"][now]
-            assert m["lo"] <= _key_hash(key) < m["hi"]
-        else:
-            assert now == shard  # untouched shard keeps its keys
-    with _pytest.raises(ValueError, match="CLOSED"):
-        split_shard(d, "shard-0")
-    with _pytest.raises(ValueError, match="not adjacent"):
-        merge_shards(d, kid_a, "shard-1") if (
-            load_lineage(d)["shards"][kid_a]["hi"]
-            != load_lineage(d)["shards"]["shard-1"]["lo"]
-        ) else merge_shards(d, kid_b, kid_a + "nope")
-
-
-def _run_collecting(spark, d, ck):
-    """Drain the stream through foreachBatch, returning
-    [(epoch, shard_id, sequence_number, partition_key, data), ...]."""
-    got: list[tuple] = []
-
-    def handle(df, epoch_id):
-        for r in df.collect():
-            got.append(
-                (
-                    epoch_id,
-                    r["shard_id"],
-                    r["sequence_number"],
-                    r["partition_key"],
-                    r["data"],
-                )
-            )
-
-    q = (
-        spark.readStream.format("kinesis_replay")
-        .option("path", d)
-        .load()
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ck)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return got
-
-
-def test_split_mid_stream_exactly_once_parent_before_children(
-    spark, tmp_path
-):
-    """Split with UNCONSUMED parent records: the consumer must drain
-    the parent to SHARD_END before any child record is offered (KCL
-    shard-sync), per-key order across the lineage is delivery order,
-    and the union is exactly-once across the split + a restart."""
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        load_lineage,
-        split_shard,
-        write_replay_slices,
-    )
-
-    d = _lineage_stream(tmp_path, n_shards=2)
-    ck = str(tmp_path / "ck")
-    write_replay_slices(d, _records(0, 60))
-    kid_a, kid_b = split_shard(d, "shard-0")
-    write_replay_slices(d, _records(60, 120))
-    register_replay_source(spark)
-
-    got = _run_collecting(spark, d, ck)
-    assert {g[4] for g in got} == {f"payload-{i}" for i in range(120)}
-    assert len(got) == 120  # exactly once
-
-    # children only carry post-split records of the parent's keys
-    lin = load_lineage(d)
-    for epoch, shard, seq, pk, data in got:
-        if shard in (kid_a, kid_b):
-            m = lin["shards"][shard]
-            from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-                _key_hash,
-            )
-
-            assert m["lo"] <= _key_hash(pk) < m["hi"]
-
-    # gate: every parent record's epoch strictly precedes every child
-    # record's epoch (children open only after SHARD_END is consumed)
-    parent_epochs = [g[0] for g in got if g[1] == "shard-0"]
-    child_epochs = [g[0] for g in got if g[1] in (kid_a, kid_b)]
-    assert parent_epochs and child_epochs
-    assert max(parent_epochs) < min(child_epochs)
-
-    # per-key order across lineage: parent seqs (in seq order) all
-    # delivered before the child's first record of that key
-    by_key: dict = {}
-    for epoch, shard, seq, pk, data in got:
-        by_key.setdefault(pk, []).append((epoch, shard, seq))
-    for pk, recs in by_key.items():
-        shards = {s for _, s, _ in recs}
-        if "shard-0" in shards and shards & {kid_a, kid_b}:
-            pe = [e for e, s, _ in recs if s == "shard-0"]
-            ce = [e for e, s, _ in recs if s != "shard-0"]
-            assert max(pe) < min(ce), pk
-
-    # restart from checkpoint: nothing re-delivered, new child
-    # appends flow immediately (parents already checkpoint-complete)
-    write_replay_slices(d, _records(120, 150))
-    got2 = _run_collecting(spark, d, ck)
-    assert {g[4] for g in got2} == {f"payload-{i}" for i in range(120, 150)}
-    assert len(got2) == 30
-    assert all(g[1] != "shard-0" for g in got2)
-
-
-def test_merge_shards_gate_and_union(spark, tmp_path):
-    """Merge: both parents drain to SHARD_END before the merged child
-    emits; union exactly once; the child owns both parents' keys."""
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        merge_shards,
-        write_replay_slices,
-    )
-
-    d = _lineage_stream(tmp_path, n_shards=2)
-    ck = str(tmp_path / "ck")
-    write_replay_slices(d, _records(0, 40))
-    kid = merge_shards(d, "shard-0", "shard-1")
-    write_replay_slices(d, _records(40, 90))
-    register_replay_source(spark)
-
-    got = _run_collecting(spark, d, ck)
-    assert {g[4] for g in got} == {f"payload-{i}" for i in range(90)}
-    assert len(got) == 90
-    kid_epochs = [g[0] for g in got if g[1] == kid]
-    parent_epochs = [g[0] for g in got if g[1] != kid]
-    assert {g[1] for g in got if g[1] != kid} == {"shard-0", "shard-1"}
-    assert max(parent_epochs) < min(kid_epochs)
-    # all post-merge records landed on the child
-    assert {g[4] for g in got if g[1] == kid} == {
-        f"payload-{i}" for i in range(40, 90)
-    }
-
-
-def test_split_replays_identically(spark, tmp_path):
-    """Two independent consumers of the same resharded stream deliver
-    the identical record set with identical (shard, seq) assignment —
-    replays are deterministic."""
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        split_shard,
-        write_replay_slices,
-    )
-
-    d = _lineage_stream(tmp_path, n_shards=2)
-    write_replay_slices(d, _records(0, 50))
-    split_shard(d, "shard-1")
-    write_replay_slices(d, _records(50, 100))
-    register_replay_source(spark)
-
-    a = _run_collecting(spark, d, str(tmp_path / "ck_a"))
-    b = _run_collecting(spark, d, str(tmp_path / "ck_b"))
-    key = lambda g: (g[1], g[2])  # noqa: E731
-    assert sorted((g[1], g[2], g[3], g[4]) for g in a) == sorted(
-        (g[1], g[2], g[3], g[4]) for g in b
-    )
-
-
-def test_chained_resharding_random_sequence_invariants(spark, tmp_path):
-    """Multi-generation reshard soak (seeded): four reshard events —
-    random valid splits/merges, so children of children and merges of
-    split-children occur — interleaved with production over a
-    40-key pool, the reader resuming from its checkpoint between
-    phases. The per-event tests above pin each mechanism; this pins
-    the GENERAL invariants on an arbitrary lineage DAG:
-
-      1. exactly-once union across all resume sessions;
-      2. hash-range ownership: every record is delivered from a shard
-         whose [lo, hi) owns its key's hash;
-      3. transitive lineage gate: within a session, a shard's records
-         all arrive in strictly later epochs than every delivery from
-         every ANCESTOR (not just direct parents);
-      4. per-key total order: each key's payload indices strictly
-         increase in delivery order (session, epoch, seq).
-    """
-    import random
-
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        _key_hash,
-        load_lineage,
-        merge_shards,
-        split_shard,
-        write_replay_slices,
-    )
-
-    rng = random.Random(8)
-    d = _lineage_stream(tmp_path, n_shards=3)
-    ck = str(tmp_path / "ck")
-    register_replay_source(spark)
-
-    def recs(lo, hi):
-        return [(f"user-{i % 37}", f"payload-{i}") for i in range(lo, hi)]
-
-    def random_reshard():
-        lin = load_lineage(d)
-        open_shards = sorted(
-            (m["lo"], name)
-            for name, m in lin["shards"].items()
-            if m["status"] == "OPEN"
-        )
-        adjacent = [
-            (a[1], b[1])
-            for a, b in zip(open_shards, open_shards[1:])
-            if lin["shards"][a[1]]["hi"] == lin["shards"][b[1]]["lo"]
-        ]
-        if adjacent and rng.random() < 0.5:
-            merge_shards(d, *rng.choice(adjacent))
-        else:
-            split_shard(d, rng.choice(open_shards)[1])
-
-    sessions = []
-    lo = 0
-    for phase in range(4):
-        write_replay_slices(d, recs(lo, lo + 60))
-        lo += 60
-        random_reshard()
-        write_replay_slices(d, recs(lo, lo + 60))
-        lo += 60
-        sessions.append(_run_collecting(spark, d, ck))
-
-    lin = load_lineage(d)
-
-    # 1. exactly-once union over all sessions
-    all_got = [g for s in sessions for g in s]
-    assert len(all_got) == lo
-    assert {g[4] for g in all_got} == {f"payload-{i}" for i in range(lo)}
-
-    # 2. delivery-shard hash-range ownership
-    for _, shard, _, pk, _ in all_got:
-        m = lin["shards"][shard]
-        assert m["lo"] <= _key_hash(pk) < m["hi"], (shard, pk)
-
-    # 3. transitive gate per session: ancestors fully precede
-    def ancestors(shard: str) -> set:
-        out, todo = set(), list(lin["shards"][shard]["parents"])
-        while todo:
-            p = todo.pop()
-            if p not in out:
-                out.add(p)
-                todo.extend(lin["shards"][p]["parents"])
-        return out
-
-    for got in sessions:
-        epochs: dict[str, list] = {}
-        for epoch, shard, _, _, _ in got:
-            epochs.setdefault(shard, []).append(epoch)
-        for shard, es in epochs.items():
-            for anc in ancestors(shard) & set(epochs):
-                assert max(epochs[anc]) < min(es), (anc, shard)
-
-    # 4. per-key total order: payload index increases along
-    # (session, epoch, seq) — write order survives the whole DAG
-    by_key: dict[str, list] = {}
-    for si, got in enumerate(sessions):
-        for epoch, shard, seq, pk, data in got:
-            by_key.setdefault(pk, []).append(
-                (si, epoch, seq, int(data.rsplit("-", 1)[1]))
-            )
-    assert len(by_key) == 37
-    for pk, entries in by_key.items():
-        idxs = [i for *_, i in sorted(entries)]
-        assert idxs == sorted(idxs), pk
-        assert len(set(idxs)) == len(idxs), pk
-
-
 def test_per_shard_lag_surfaces_in_progress_events(spark, tmp_path):
     """KCL MillisBehindLatest twin (round-10 verdict task 6): plant a
     lagging shard by capping per-trigger admission below one shard's
@@ -962,8 +495,6 @@ def test_per_shard_lag_surfaces_in_progress_events(spark, tmp_path):
     assert records_behind_latest(d, {"shard-0": [1, len(first)]})[
         "shard-0"
     ] == 39
-    # legacy bare-line offsets still work (no byte position)
-    assert records_behind_latest(d, {"shard-0": 5})["shard-0"] == 35
 
     listener = shard_lag_listener(d)
     spark.streams.addListener(listener)
@@ -1017,355 +548,3 @@ def test_per_shard_lag_surfaces_in_progress_events(spark, tmp_path):
         assert spark.read.parquet(out).count() == 40
     finally:
         spark.streams.removeListener(listener)
-
-
-class _KinesisEndpoint:
-    """Minimal local HTTP endpoint speaking the Kinesis JSON-1.1 wire
-    protocol (POST /, X-Amz-Target: Kinesis_20131202.<Op>), backed by
-    the replay-store producer/reshard primitives — the moto-style twin
-    of the real AWS side for the PRODUCER half, mirroring round 9's
-    _FirehoseEndpoint for the consumer's sink. CreateStream /
-    SplitShard / MergeShards mutate the lineage file; PutRecords
-    routes by hash range exactly like write_replay_slices; Describe-
-    Stream reports lineage as Kinesis Shard entries (hash keys in the
-    simulator's 32-bit md5-prefix space; EndingHashKey inclusive, per
-    the API). Every request's (target, body) is recorded for
-    wire-shape assertions."""
-
-    def __init__(self, path: str):
-        import base64
-        import http.server
-        import threading
-
-        from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-            _route,
-            _scan_complete,
-            create_stream,
-            load_lineage,
-            merge_shards,
-            split_shard,
-            write_replay_slices,
-        )
-
-        self.path = path
-        self.requests = []  # (X-Amz-Target op, parsed body)
-        ep = self
-
-        def _describe(body):
-            lin = load_lineage(ep.path)
-            shards = []
-            for name, m in lin["shards"].items():
-                entry = {
-                    "ShardId": name,
-                    "HashKeyRange": {
-                        "StartingHashKey": str(m["lo"]),
-                        "EndingHashKey": str(m["hi"] - 1),
-                    },
-                    "SequenceNumberRange": {"StartingSequenceNumber": "0"},
-                }
-                if m["parents"]:
-                    entry["ParentShardId"] = m["parents"][0]
-                if len(m["parents"]) > 1:
-                    entry["AdjacentParentShardId"] = m["parents"][1]
-                shards.append(entry)
-            return {
-                "StreamDescription": {
-                    "StreamName": body["StreamName"],
-                    "StreamARN": (
-                        "arn:aws:kinesis:us-east-1:000000000000:stream/"
-                        + body["StreamName"]
-                    ),
-                    "StreamStatus": "ACTIVE",
-                    "Shards": shards,
-                    "HasMoreShards": False,
-                    "RetentionPeriodHours": 24,
-                    "StreamCreationTimestamp": 0,
-                    "EnhancedMonitoring": [],
-                }
-            }
-
-        def _put_records(body):
-            lin = load_lineage(ep.path)
-            out = []
-            import os as _os
-
-            next_seq = {}
-            for rec in body["Records"]:
-                pk = rec["PartitionKey"]
-                data = base64.b64decode(rec["Data"]).decode()
-                shard = _route(lin, pk)
-                if shard not in next_seq:
-                    fp = _os.path.join(ep.path, f"{shard}.jsonl")
-                    next_seq[shard] = (
-                        _scan_complete(fp, 0, 0)[0]
-                        if _os.path.exists(fp)
-                        else 0
-                    )
-                write_replay_slices(ep.path, [(pk, data)])
-                out.append(
-                    {
-                        "SequenceNumber": str(next_seq[shard]),
-                        "ShardId": shard,
-                    }
-                )
-                next_seq[shard] += 1
-            return {"FailedRecordCount": 0, "Records": out}
-
-        def _split(body):
-            lin = load_lineage(ep.path)
-            m = lin["shards"][body["ShardToSplit"]]
-            mid = (m["lo"] + m["hi"]) // 2
-            # the simulator always splits at the midpoint; a producer
-            # asking for any other split point gets the API's
-            # InvalidArgumentException rather than a silent remap
-            if int(body["NewStartingHashKey"]) != mid:
-                raise ValueError(
-                    f"NewStartingHashKey must be {mid} in this simulator"
-                )
-            split_shard(ep.path, body["ShardToSplit"])
-            return {}
-
-        def _merge(body):
-            merge_shards(
-                ep.path, body["ShardToMerge"], body["AdjacentShardToMerge"]
-            )
-            return {}
-
-        ops = {
-            "CreateStream": lambda b: (
-                create_stream(ep.path, b["ShardCount"]) or {}
-            ),
-            "DescribeStream": _describe,
-            "PutRecords": _put_records,
-            "SplitShard": _split,
-            "MergeShards": _merge,
-        }
-
-        class Handler(http.server.BaseHTTPRequestHandler):
-            def do_POST(self):  # noqa: N802 — BaseHTTPRequestHandler API
-                import json as _json
-
-                target = self.headers.get("X-Amz-Target", "")
-                op = target.split(".")[-1]
-                body = _json.loads(
-                    self.rfile.read(int(self.headers["Content-Length"]))
-                )
-                ep.requests.append((op, body))
-                try:
-                    resp = ops[op](body)
-                    status = 200
-                except (ValueError, KeyError) as exc:
-                    resp = {
-                        "__type": "InvalidArgumentException",
-                        "message": str(exc),
-                    }
-                    status = 400
-                payload = _json.dumps(resp).encode()
-                self.send_response(status)
-                self.send_header(
-                    "Content-Type", "application/x-amz-json-1.1"
-                )
-                self.send_header("Content-Length", str(len(payload)))
-                self.end_headers()
-                self.wfile.write(payload)
-
-            def log_message(self, *a):  # quiet
-                pass
-
-        self.httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self.url = f"http://127.0.0.1:{self.httpd.server_port}"
-        threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
-
-    def close(self):
-        self.httpd.shutdown()
-        self.httpd.server_close()
-
-
-def _kinesis_client(url):
-    import boto3
-    from botocore.config import Config
-
-    return boto3.client(
-        "kinesis",
-        region_name="us-east-1",
-        endpoint_url=url,
-        aws_access_key_id="test-key",
-        aws_secret_access_key="test-secret",
-        config=Config(
-            retries={"max_attempts": 1}, connect_timeout=5, read_timeout=5
-        ),
-    )
-
-
-def test_kinesis_wire_create_put_and_routing(tmp_path):
-    """Round-10 verdict task 8, producer half over the wire: a REAL
-    boto3 Kinesis client creates the stream and puts records through
-    the JSON-1.1 endpoint; asserts the on-the-wire request shape
-    (X-Amz-Target op, base64 Data round-trip) and that the returned
-    ShardIds match the hash-range routing the replay store applied."""
-    import base64
-
-    import pytest
-
-    pytest.importorskip("boto3")
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        _key_hash,
-        load_lineage,
-    )
-
-    d = str(tmp_path / "stream")
-    ep = _KinesisEndpoint(d)
-    try:
-        c = _kinesis_client(ep.url)
-        c.create_stream(StreamName="s", ShardCount=4)
-        lin = load_lineage(d)
-        assert len(lin["shards"]) == 4
-        assert all(m["status"] == "OPEN" for m in lin["shards"].values())
-        # the 4 ranges partition the 32-bit space
-        spans = sorted(
-            (m["lo"], m["hi"]) for m in lin["shards"].values()
-        )
-        assert spans[0][0] == 0 and spans[-1][1] == 1 << 32
-        assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
-
-        recs = [(f"key-{i}", f"payload-{i}".encode()) for i in range(12)]
-        resp = c.put_records(
-            StreamName="s",
-            Records=[
-                {"Data": data, "PartitionKey": pk} for pk, data in recs
-            ],
-        )
-        assert resp["FailedRecordCount"] == 0
-        # returned ShardId == the hash-range owner of each key
-        for (pk, _), r in zip(recs, resp["Records"]):
-            m = lin["shards"][r["ShardId"]]
-            assert m["lo"] <= _key_hash(pk) < m["hi"], (pk, r["ShardId"])
-        # wire shape: target op recorded, Data was base64 on the wire
-        ops_seen = [op for op, _ in ep.requests]
-        assert ops_seen == ["CreateStream", "PutRecords"]
-        _, put_body = ep.requests[1]
-        assert [
-            base64.b64decode(r["Data"]) for r in put_body["Records"]
-        ] == [data for _, data in recs]
-        # and the records landed in exactly the shards the response
-        # named, at the sequence numbers it returned
-        import json as _json
-        import os as _os
-
-        for (pk, data), r in zip(recs, resp["Records"]):
-            fp = _os.path.join(d, f"{r['ShardId']}.jsonl")
-            lines = open(fp).read().splitlines()
-            rec = _json.loads(lines[int(r["SequenceNumber"])])
-            assert (rec["pk"], rec["data"].encode()) == (pk, data)
-    finally:
-        ep.close()
-
-
-def test_kinesis_wire_reshard_lineage(tmp_path):
-    """SplitShard/MergeShards over the wire: lineage parent/child
-    relations and hash-range conservation assert through boto3's
-    DescribeStream view, and post-reshard PutRecords route a parent's
-    key to exactly the child owning its hash."""
-    import pytest
-
-    pytest.importorskip("boto3")
-    from kinesis_to_firehose_spark.sources.kinesis_datasource import (
-        _key_hash,
-        load_lineage,
-    )
-
-    d = str(tmp_path / "stream")
-    ep = _KinesisEndpoint(d)
-    try:
-        c = _kinesis_client(ep.url)
-        c.create_stream(StreamName="s", ShardCount=2)
-        lin0 = load_lineage(d)
-        parent = "shard-0"
-        mid = (
-            lin0["shards"][parent]["lo"] + lin0["shards"][parent]["hi"]
-        ) // 2
-        c.split_shard(
-            StreamName="s",
-            ShardToSplit=parent,
-            NewStartingHashKey=str(mid),
-        )
-        # a non-midpoint split point is rejected with the API error
-        import botocore.exceptions
-
-        with pytest.raises(botocore.exceptions.ClientError) as ei:
-            c.split_shard(
-                StreamName="s",
-                ShardToSplit="shard-1",
-                NewStartingHashKey=str(mid + 17),
-            )
-        assert (
-            ei.value.response["Error"]["Code"]
-            == "InvalidArgumentException"
-        )
-
-        desc = c.describe_stream(StreamName="s")["StreamDescription"]
-        by_id = {s["ShardId"]: s for s in desc["Shards"]}
-        kids = [
-            s for s in desc["Shards"] if s.get("ParentShardId") == parent
-        ]
-        assert len(kids) == 2
-        # children partition the parent's hash range exactly
-        lo = int(by_id[parent]["HashKeyRange"]["StartingHashKey"])
-        hi = int(by_id[parent]["HashKeyRange"]["EndingHashKey"])
-        kid_spans = sorted(
-            (
-                int(k["HashKeyRange"]["StartingHashKey"]),
-                int(k["HashKeyRange"]["EndingHashKey"]),
-            )
-            for k in kids
-        )
-        assert kid_spans[0][0] == lo and kid_spans[1][1] == hi
-        assert kid_spans[0][1] + 1 == kid_spans[1][0]
-
-        # a key that hashed into the parent now routes to the owning
-        # child — per-key order across the lineage survives resharding
-        pk = next(
-            f"key-{i}"
-            for i in range(10_000)
-            if lo <= _key_hash(f"key-{i}") <= hi
-        )
-        resp = c.put_records(
-            StreamName="s",
-            Records=[{"Data": b"post-split", "PartitionKey": pk}],
-        )
-        child = resp["Records"][0]["ShardId"]
-        assert child in {k["ShardId"] for k in kids}
-        h = _key_hash(pk)
-        kr = next(k for k in kids if k["ShardId"] == child)["HashKeyRange"]
-        assert int(kr["StartingHashKey"]) <= h <= int(kr["EndingHashKey"])
-
-        # merge the two children back: one child, both parents CLOSED
-        merged = c.merge_shards(
-            StreamName="s",
-            ShardToMerge=kids[0]["ShardId"],
-            AdjacentShardToMerge=kids[1]["ShardId"],
-        )
-        lin = load_lineage(d)
-        child_names = {k["ShardId"] for k in kids}
-        merged_name = next(
-            n
-            for n, m in lin["shards"].items()
-            if set(m["parents"]) == child_names
-        )
-        assert lin["shards"][merged_name]["status"] == "OPEN"
-        assert all(
-            lin["shards"][k]["status"] == "CLOSED" for k in child_names
-        )
-        assert lin["shards"][merged_name]["lo"] == lo
-        assert lin["shards"][merged_name]["hi"] == hi + 1
-        # DescribeStream reports the merge's dual parentage
-        desc2 = c.describe_stream(StreamName="s")["StreamDescription"]
-        m_entry = next(
-            s for s in desc2["Shards"] if s["ShardId"] == merged_name
-        )
-        assert {
-            m_entry["ParentShardId"],
-            m_entry["AdjacentParentShardId"],
-        } == child_names
-    finally:
-        ep.close()

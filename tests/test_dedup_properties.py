@@ -1733,20 +1733,9 @@ def test_ann_index_probe_plan_reads_store_and_prunes_epochs(
     spark, tmp_path, monkeypatch
 ):
     """ann_index_probe's physical plan reads the persisted epoch store
-    (no in-plan corpus re-assignment), and an epoch-pinned search
-    prunes later epochs at PLANNING time (partition filter on the
-    epoch dir column — the probe's a-batch-never-sees-itself
-    guarantee costs zero file reads, not a runtime filter)."""
-    from pyspark.sql import functions as F
-
-    from kinesis_to_firehose_spark.operators.dedup import normed_embeddings
+    (no in-plan corpus re-assignment)."""
     from kinesis_to_firehose_spark.operators.similarity import (
         ann_index_probe,
-    )
-    from kinesis_to_firehose_spark.plans.explain import physical_plan
-    from kinesis_to_firehose_spark.sources.ann_index import (
-        build_ann_index_epoch,
-        search_ann_index,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1757,20 +1746,6 @@ def test_ann_index_probe_plan_reads_store_and_prunes_epochs(
     probe_df = ann_index_probe(spark, sf)
     files = probe_df.inputFiles()
     assert any("ann_index_epochs" in f for f in files), files
-
-    # epoch pinning prunes at planning time: the pinned scan's
-    # partition filter names the epoch column
-    n = normed_embeddings(spark, sf).select("vec_id", "embedding", "nrm")
-    idx = str(tmp_path / "idx")
-    build_ann_index_epoch(spark, n.filter(F.col("vec_id") % 2 == 0), idx, 0)
-    build_ann_index_epoch(spark, n.filter(F.col("vec_id") % 2 == 1), idx, 1)
-    queries = n.filter(F.col("vec_id") < 3)
-    pinned = physical_plan(search_ann_index(spark, queries, idx, max_epoch=0))
-    assert "epoch" in pinned and "PartitionFilters" in pinned
-    import re
-
-    m = re.search(r"PartitionFilters: \[[^\]]*epoch[^\]]*\]", pinned)
-    assert m, pinned
 
 
 def test_edit_pairs_store_equals_direct_plan(spark, tmp_path, monkeypatch):

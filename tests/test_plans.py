@@ -277,30 +277,6 @@ def test_plan_digest_counts(spark):
     assert set(committed["decode_parse_enhance"]) == set(d)
 
 
-def test_materialized_scan_sharing(spark):
-    """Inside sources.tables.materialized(): queries read the cached
-    table (InMemoryTableScan in the plan) and return identical
-    results; outside, load() goes back to parquet and the cache is
-    released."""
-    from kinesis_to_firehose_spark.plans.explain import physical_plan
-    from kinesis_to_firehose_spark.sources.tables import materialized
-
-    # other tests' localCheckpoints may already hold persisted RDDs in
-    # this shared session — assert on the DELTA, not emptiness
-    jsc = spark.sparkContext._jsc.sc()
-    persisted_before = jsc.getPersistentRDDs().size()
-    want = sorted(map(tuple, OPS["q1_pricing_summary"].fn(spark, SF).collect()))
-    with materialized(spark, SF, ("lineitem",)):
-        df = OPS["q1_pricing_summary"].fn(spark, SF)
-        assert "InMemoryTableScan" in physical_plan(df)
-        got = sorted(map(tuple, df.collect()))
-    assert got == want
-    after = physical_plan(OPS["q1_pricing_summary"].fn(spark, SF))
-    assert "InMemoryTableScan" not in after
-    # the context's cache is released (no NEW persisted RDDs remain)
-    assert jsc.getPersistentRDDs().size() <= persisted_before
-
-
 def test_shuffle_advisor_arithmetic_and_aqe_coalesce(spark):
     """Over-provisioned shuffle partitions are safe because AQE
     demonstrably coalesces: a tiny aggregate run at 32 shuffle

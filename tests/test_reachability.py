@@ -27,11 +27,6 @@ KEEP = {
     "minhash_lsh_pairs": "ungated LSH pairs, the reference for the gated path",
     "approx_distinct_raw": "exact + HLL distincts, the reference for approx_distinct",
     "hll_partition_merge_raw": "raw sketch-merge plan, the reference for the op",
-    # connector API of the kinesis_replay source
-    "create_stream": "connector API: reshardable stream with lineage",
-    "split_shard": "connector API: SplitShard",
-    "merge_shards": "connector API: MergeShards",
-    "orphaned_lease_positions": "connector API: KCL lease takeover",
     # ROADMAP item 3 wires these into the consume CLI
     "shard_lag_listener": "per-shard lag telemetry for consume",
     "drop_stats_stream": "stats.go drop-stats stream for consume",
