@@ -1918,16 +1918,15 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# dedup_incremental — continuous-ingest dedup: check a NEW batch of
+# dedup_index_probe — continuous-ingest dedup: check a NEW batch of
 # documents (doc_id % 10 == 0 models the day's arrivals) against the
 # EXISTING corpus, never old-vs-old. Exact membership via the
 # normalized fingerprint plus near-dup candidates via the minhash band
-# index, joined new×old only. At 100 TB the old side's signatures and
-# band keys are a persisted index table updated per ingest (computed
-# here from the parquet because no index store exists in the harness);
-# the property that scales is the join shape: per-ingest cost is
-# O(new batch) signature work + equi-joins that touch only matching
-# band buckets — the corpus is never re-paired against itself.
+# index, joined new×old only. The old side's fingerprints and band
+# keys are a persisted index (sources/dedup_index.py) updated per
+# ingest; per-ingest cost is O(new batch) signature work + equi-joins
+# that touch only matching band buckets — the corpus is never
+# re-paired against itself.
 # --------------------------------------------------------------------------
 NEW_MOD = 10
 
@@ -1977,19 +1976,15 @@ ORDER BY ne.doc_id
 """
 
 
-def doc_band_keys(docs: DataFrame, checkpoint: bool = False) -> DataFrame:
+def doc_band_keys(docs: DataFrame) -> DataFrame:
     """(doc_id, band_idx, band_key) minhash band-index rows for an
     arbitrary documents-shaped DataFrame — the rows the persisted
-    dedup index stores and probes (sources/dedup_index.py). Pass
-    checkpoint=True when the result is consumed more than once (e.g.
-    a self-join) so the shingle→signature chain runs once."""
+    dedup index stores and probes (sources/dedup_index.py)."""
     ex = shingles_from_docs(docs, carry=()).select("doc_id", "shingle")
     hashed_v = ex.select("doc_id", F.expr(_V_SPARK).alias("v"))
     sigs = hashed_v.groupBy("doc_id").agg(
         *[F.expr(e) for e in _sig_agg_spark(N_PERMS)]
     )
-    if checkpoint:
-        sigs = sigs.localCheckpoint(eager=True)
     return (
         sigs.select(
             "doc_id",
@@ -2014,12 +2009,10 @@ def incremental_verdicts(
     old_fp: DataFrame,
     old_bands: DataFrame,
 ) -> DataFrame:
-    """Shared new-vs-old verdict assembly: exact membership via the
+    """New-vs-old verdict assembly: exact membership via the
     fingerprint join, near candidates via the band equi-join, one
-    verdict row per new doc. Both dedup_incremental (old side computed
-    in-plan) and dedup_index_probe (old side read from the persisted
-    index) end here, so the join shapes and the verdict rule cannot
-    drift."""
+    verdict row per new doc. dedup_index_probe reads the old side from
+    the persisted index (sources/dedup_index.py)."""
     near = (
         new_bands.alias("n")
         .join(
@@ -2058,29 +2051,16 @@ def incremental_verdicts(
     )
 
 
-@register("dedup_incremental", DEDUP_INCREMENTAL_SQL)
-def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, "documents", sf_dir)
-    is_new = F.col("doc_id") % NEW_MOD == 0
-    bands = doc_band_keys(d, checkpoint=True)
-    fp = doc_fingerprints(d)
-    return incremental_verdicts(
-        fp.filter(is_new),
-        bands.filter(is_new),
-        fp.filter(~is_new),
-        bands.filter(~is_new),
-    )
-
-
 @register("dedup_index_probe", DEDUP_INCREMENTAL_SQL)
 def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_incremental's contract served from a PERSISTED index: the
+    """New-vs-old dedup verdicts served from a PERSISTED index: the
     old side's fingerprints and band keys are built once into a
     parquet index store (sources/dedup_index.py) and the probe joins
     the new batch against the STORED tables — per-ingest cost is
     O(new batch) signature work + two equi-joins; the corpus is never
-    re-signatured. Same oracle as dedup_incremental (the index is an
-    implementation detail the verdicts must not observe)."""
+    re-signatured. The index is an implementation detail the verdicts
+    must not observe: the oracle computes both sides from the
+    documents table."""
     import os
     import tempfile
 
@@ -2101,21 +2081,24 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# dedup_connected_components — the last stage of the near-dup
-# pipeline: candidate PAIRS (minhash est_jaccard ≥ τ) → dup CLUSTERS,
-# as min-label propagation over the pair graph. Each iteration is a
-# join of the current labels with the edge list plus a min-aggregate,
-# localCheckpointed to truncate the iterative plan; the loop exits as
-# soon as an iteration changes nothing (cluster diameter bounds the
-# count — near-dup clusters are short chains, so 2-4 iterations in
-# practice; a 100 TB run on adversarial chain-shaped graphs would
-# switch to the log-diameter large-star/small-star variant, same join
-# primitives). The edge list is the tiny LSH-candidate output, NOT the
-# corpus: this never touches non-duplicate documents. The DuckDB
-# oracle states the same fixpoint as a recursive CTE.
+# dedup_cc_star — the last stage of the near-dup pipeline: candidate
+# PAIRS (minhash est_jaccard ≥ τ, read from the persisted pair store)
+# → dup CLUSTERS, labelled by the component minimum. Computed with the
+# alternating large-star / small-star algorithm (Kiveris et al.,
+# "Connected Components in MapReduce and Beyond", SoCC'14) rather than
+# min-label propagation, whose O(diameter) rounds blow up on
+# chain-shaped graphs (templated doc series where doc_i ~ doc_{i+1}
+# only). Large-star hangs every above-u neighbor directly off u's
+# neighborhood minimum; small-star re-hangs the below-u neighbors;
+# alternating the two collapses any component into a star in
+# O(log² n) rounds regardless of diameter. Each phase is a window min
+# over the EDGE list (the tiny LSH-candidate output, never the
+# corpus), so each round is one bounded shuffle. Edges stay
+# canonically oriented src > dst throughout, which makes the
+# convergence check a set compare of two small distinct edge lists.
+# The DuckDB oracle states the same fixpoint as a recursive CTE.
 # --------------------------------------------------------------------------
 CLUSTER_TAU = 0.5
-_CC_MAX_ITERS = 15
 
 _MINHASH_BODY = MINHASH_SQL.replace(
     "\nORDER BY doc_id_1, doc_id_2\n", "\n"
@@ -2147,73 +2130,6 @@ ORDER BY doc_id
 """
 
 
-@register("dedup_connected_components", CONNECTED_COMPONENTS_SQL)
-def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = lsh_store_pairs_tau(spark, sf_dir, CLUSTER_TAU)
-    edges = (
-        pairs.select(
-            F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
-        )
-        .unionAll(
-            pairs.select(
-                F.col("doc_id_2").alias("src"), F.col("doc_id_1").alias("dst")
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("v"))
-        .distinct()
-        .withColumn("l", F.col("v"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_CC_MAX_ITERS):
-        propagated = (
-            labels.join(edges, F.col("v") == F.col("src"))
-            .select(F.col("dst").alias("v"), "l")
-            .unionAll(labels.select("v", "l"))
-            .groupBy("v")
-            .agg(F.min("l").alias("l"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            propagated.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.l") != F.col("o.l"))
-            .limit(1)
-            .count()
-        )
-        labels = propagated
-        if changed == 0:
-            break
-    w = W.partitionBy("cluster_id")
-    return (
-        labels.select(
-            F.col("v").alias("doc_id"), F.col("l").alias("cluster_id")
-        )
-        .withColumn("cluster_size", F.count("*").over(w).cast("bigint"))
-        .orderBy("doc_id")
-    )
-
-
-# --------------------------------------------------------------------------
-# dedup_cc_star — the same pairs→clusters contract as
-# dedup_connected_components, via the alternating large-star /
-# small-star algorithm (Kiveris et al., "Connected Components in
-# MapReduce and Beyond", SoCC'14). Min-label propagation needs
-# O(diameter) rounds — fine for near-dup clusters (short chains), but
-# adversarial chain-shaped graphs (templated doc series where doc_i ~
-# doc_{i+1} only) make diameter O(n). Large-star hangs every
-# above-u neighbor directly off u's neighborhood minimum; small-star
-# re-hangs the below-u neighbors; alternating the two collapses any
-# component into a star in O(log² n) rounds regardless of diameter.
-# Both phases are a groupBy-min plus an equi-join on the EDGE list
-# (the tiny LSH-candidate output, never the corpus), so each round is
-# one bounded shuffle. Edges stay canonically oriented src > dst
-# throughout, which makes the convergence check a set compare of two
-# small distinct edge lists. Oracle: identical fixpoint, same
-# recursive CTE as dedup_connected_components.
-# --------------------------------------------------------------------------
 _STAR_MAX_ROUNDS = 20
 
 
@@ -2260,6 +2176,8 @@ def star_components(edges: DataFrame) -> tuple[DataFrame, int]:
     labels ``(v, l)`` where l is the component minimum. Returns the
     labels DataFrame and the number of (large, small) rounds taken —
     O(log² n) even on path graphs where label propagation needs O(n).
+    Raises ValueError if the edges still change after _STAR_MAX_ROUNDS
+    rounds.
     """
     e = (
         edges.select(
@@ -2297,6 +2215,13 @@ def star_components(edges: DataFrame) -> tuple[DataFrame, int]:
         e, e_cnt = n, n_cnt
         if changed == 0:
             break
+    else:
+        # still changing at the cap: the labels would be a partial
+        # collapse (split clusters), so fail instead of returning them
+        raise ValueError(
+            f"star_components did not converge in {_STAR_MAX_ROUNDS} "
+            f"rounds"
+        )
     roots = e.select(F.col("dst").alias("v")).subtract(
         e.select(F.col("src").alias("v"))
     )

@@ -4,10 +4,10 @@
   Query side is tiny and broadcast; ranking is a per-query window (a
   partial per-partition top-k then a merge under AQE), never a global
   sort of all candidates.
-- ann_ivf_topk: IVF with deterministic seed centroids (vec_id <
+- ann_index_search: IVF with deterministic seed centroids (vec_id <
   N_CENTROIDS): assign every vector to its nearest centroid (narrow
-  map over a broadcast centroid list), probe only the query's cell.
-  SQL-expressible → full DuckDB oracle.
+  map over a broadcast centroid list) into a persisted index, probe
+  only the query's cells. SQL-expressible → full DuckDB oracle.
 - ann_lsh_bucketed: random-hyperplane LSH where plane components come
   from md5 parity (deterministic, engine-reproducible); rows-only
   check (bucket recall vs brute force is asserted in pytest).
@@ -199,31 +199,18 @@ def _assign_cells(n: DataFrame, cents: DataFrame) -> DataFrame:
     return vecs.mapInPandas(_assign, schema="vec_id long, cell long")
 
 
-@register("ann_ivf_topk", IVF_SQL)
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = normed_embeddings(spark, sf_dir)
-    cents = n.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    # rank cells for the N_QUERIES probes only; corpus-wide assignment
-    # goes through the Arrow kernel
-    ranked_q = _ranked_cells(n.filter(F.col("vec_id") < N_QUERIES), cents)
-    return _ivf_probe_topk(n, ranked_q, _assign_cells(n, cents))
-
-
 def _ivf_probe_topk(
     n: DataFrame, ranked_q: DataFrame, assignment: DataFrame
 ) -> DataFrame:
-    """Probe stage shared by the seed and trained IVF variants:
-    MULTI-PROBE — each query searches its N_PROBE nearest cells while
-    data vectors live in exactly one (so no candidate duplicates), a
-    co-partitioned equi-join on cell id, exact-rescore, per-query
-    top-k window. Probing 2 cells roughly doubles scanned candidates
-    but rescues the near-boundary queries single-probe IVF misses.
-    `ranked_q` is the query-side cell ranking; `assignment` the
-    corpus-wide rank-1 (vec_id, cell) map."""
+    """In-plan IVF probe stage (ann_ivf_trained_topk; search_ann_index
+    runs the same probe against the store): MULTI-PROBE — each query
+    searches its N_PROBE nearest cells while data vectors live in
+    exactly one (so no candidate duplicates), a co-partitioned
+    equi-join on cell id, exact-rescore, per-query top-k window.
+    Probing 2 cells roughly doubles scanned candidates but rescues the
+    near-boundary queries single-probe IVF misses. `ranked_q` is the
+    query-side cell ranking; `assignment` the corpus-wide rank-1
+    (vec_id, cell) map."""
     qa = ranked_q.filter(
         (F.col("vec_id") < N_QUERIES) & (F.col("rk") <= N_PROBE)
     ).select(F.col("vec_id").alias("query_id"), "cell")
@@ -1969,10 +1956,11 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and queries probe their N_PROBE nearest cells scoring candidates by
 # asymmetric distance (per-probed-cell residual distance tables, M
 # lookups per candidate). This is the canonical billion-scale ANN
-# layout — ann_ivf_topk and ann_pq_topk are its two halves.
+# layout — seed-centroid IVF (IVF_SQL) and ann_pq_topk are its two
+# halves.
 #
 # Conventions: coarse centroids are the seed vectors (vec_id <
-# N_CENTROIDS, as in ann_ivf_topk); the residual codebook seeds are
+# N_CENTROIDS, as in IVF_SQL); the residual codebook seeds are
 # the next PQ_K vectors' residuals (vec_id ∈ [N_CENTROIDS,
 # N_CENTROIDS+PQ_K) — past the centroids, whose own residuals are
 # degenerate zeros). Candidates are vec_id >= N_QUERIES (the
@@ -2376,12 +2364,12 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# ann_index_search — ann_ivf_topk's contract served from a PERSISTED
-# index (sources/ann_index.py): centroids + cell-partitioned
-# assignments written once, searches probe the STORE — the vector-
-# serving symmetry of dedup_index_probe, and the same oracle as
-# ann_ivf_topk (the store is an implementation detail the results
-# must not observe).
+# ann_index_search — seed-centroid multi-probe IVF (IVF_SQL) served
+# from a PERSISTED index (sources/ann_index.py): centroids +
+# cell-partitioned assignments written once, searches probe the STORE
+# — the vector-serving symmetry of dedup_index_probe. The oracle
+# computes the IVF in one query (the store is an implementation
+# detail the results must not observe).
 # --------------------------------------------------------------------------
 @register("ann_index_search", IVF_SQL)
 def ann_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2421,7 +2409,7 @@ def ann_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against the STORED centroids — never re-clustered, no old×old work
 # — and appended as epoch 1; queries (a bounded slice of the new
 # batch) then search old+new through the store. The oracle is
-# ann_ivf_topk's IVF definition on the UNIONED corpus with old-seeded
+# IVF_SQL's seed-centroid IVF on the UNIONED corpus with old-seeded
 # centroids: rank-1 nearest-centroid assignment is the same formula
 # whether computed at build or at append, so the epoch store is an
 # implementation detail the results must not observe (store == direct

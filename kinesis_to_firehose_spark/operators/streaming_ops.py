@@ -1,11 +1,13 @@
 """Registry entries that drive the STREAMING pipeline end-to-end
-(SURVEY.md §2.1 firehose_sink / kinesis_source / checkpoint_resume).
+(SURVEY.md §2.1 checkpoint_resume / kinesis_replay_source).
 
 Each op physically runs Structured Streaming against temp dirs and
 returns a small result DataFrame summarizing what was delivered —
 so the driver's correctness gate exercises the streaming path, not
-just batch queries. The delivered-count summaries have exact SQL
-oracles (delivery is loss-free over `events`).
+just batch queries. `checkpoint_resume` runs the forwarder over the
+file source (run, stop, resume); `kinesis_replay_source` reads the
+`kinesis_replay` source. Both summaries have exact SQL oracles
+(delivery is loss-free over `events`).
 
 Only such ops belong here: `registry.streaming_op_names()` is the set
 of ops this module registers, which have no static batch plan to
@@ -23,7 +25,6 @@ from pyspark.sql import functions as F
 from kinesis_to_firehose_spark.registry import register
 from kinesis_to_firehose_spark.streaming.firehose import read_delivered
 from kinesis_to_firehose_spark.streaming.pipeline import (
-    file_stream_source,
     run_pipeline,
     write_source_slice,
 )
@@ -45,22 +46,6 @@ def _delivered_counts(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
-@register("firehose_sink", COUNTS_BY_STREAM_SQL)
-def firehose_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full pipeline run: file-stream source → decode → Firehose sink;
-    returns per-stream delivered counts (oracle: events by type —
-    delivery is loss-free)."""
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "src")
-        out = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        write_source_slice(spark, sf_dir, src, n_files=3)
-        q = run_pipeline(spark, src, out, ckpt)
-        q.processAllAvailable()
-        q.stop()
-        return _delivered_counts(spark, out)
-
-
 @register("checkpoint_resume", COUNTS_BY_STREAM_SQL)
 def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the pipeline, stop it, restart from the same checkpoint with
@@ -79,29 +64,6 @@ def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         q2.processAllAvailable()
         q2.stop()
         return _delivered_counts(spark, out)
-
-
-@register("kinesis_source", "SELECT COUNT(*) AS n_records FROM events")
-def kinesis_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-read the events table through the file-source Kinesis
-    simulator (availableNow semantics via processAllAvailable) and
-    count records — proves the source surfaces every record once."""
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "src")
-        write_source_slice(spark, sf_dir, src, n_files=3)
-        name = "kinesis_source_smoke"
-        q = (
-            file_stream_source(spark, src)
-            .groupBy()
-            .agg(F.count("*").alias("n_records"))
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return spark.table(name)
 
 
 @register("kinesis_replay_source", "SELECT COUNT(*) AS n_records FROM events")

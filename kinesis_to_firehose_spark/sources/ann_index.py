@@ -107,7 +107,7 @@ def emb_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def build_ann_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Build the IVF index from the embeddings table: seed centroids
-    (vec_id < N_CENTROIDS, the ann_ivf_topk convention) + rank-1 cell
+    (vec_id < N_CENTROIDS, the IVF_SQL convention) + rank-1 cell
     assignment, written cell-partitioned."""
     from kinesis_to_firehose_spark.operators.dedup import normed_embeddings
     from kinesis_to_firehose_spark.operators.similarity import (
@@ -136,7 +136,7 @@ def search_ann_index(
     """Multi-probe IVF search against the STORE: queries (vec_id,
     embedding, nrm) rank the stored centroids (broadcast), probe
     their N_PROBE nearest cells via the partition-pruned equi-join,
-    exact-rescore, per-query top-k — the ann_ivf_topk contract with
+    exact-rescore, per-query top-k — the IVF_SQL contract with
     zero corpus-side recompute."""
     from pyspark.sql.window import Window as W
 
@@ -198,7 +198,7 @@ def build_ann_index_epoch(
     """Epoch-layout ingest for the vector store (round-11, verdict
     task 5): epoch 0 is
     the base corpus and also freezes the codebook (seed centroids =
-    the base batch's vec_id < N_CENTROIDS, the ann_ivf_topk
+    the base batch's vec_id < N_CENTROIDS, the IVF_SQL
     convention); every later epoch assigns its batch against the
     STORED centroids — never re-clusters, never touches old vectors —
     and lands in its own `assignment/epoch=K/cell=…` partition dirs.

@@ -1,11 +1,11 @@
 """Persisted dedup index — the minhash band keys and exact-text
 fingerprints of the corpus written once as parquet tables, so
 continuous ingest pays only O(new batch) signature compute plus two
-equi-joins against the store. This is the "persisted index table
-updated per ingest" the dedup_incremental docstring promises
-(operators/dedup.py): build once over the existing corpus, probe each
-arriving batch, append the accepted batch — the index grows with the
-corpus, but no ingest ever re-signatures old documents.
+equi-joins against the store. dedup_index_probe (operators/dedup.py)
+serves its verdicts from it: build once over the existing corpus,
+probe each arriving batch, append the accepted batch — the index
+grows with the corpus, but no ingest ever re-signatures old
+documents.
 
 Layout (mode=overwrite builds, mode=append extends):
 
@@ -219,9 +219,9 @@ def probe_dedup_index(
     path: str,
 ) -> DataFrame:
     """Verdicts for a new batch against the stored index: (doc_id,
-    is_exact_dup, n_near_candidates, verdict) — the dedup_incremental
-    output contract, with the old side read from parquet instead of
-    recomputed."""
+    is_exact_dup, n_near_candidates, verdict) — the
+    DEDUP_INCREMENTAL_SQL output contract, with the old side read from
+    parquet instead of recomputed."""
     from kinesis_to_firehose_spark.operators.dedup import (
         doc_band_keys,
         doc_fingerprints,

@@ -24,10 +24,11 @@ reference's delivery rules has one home:
 Spark mapping: the unit of delivery parallelism is the partition —
 `foreachPartition` workers each run the batch/retry loop against the
 transport, so delivery scales with the number of partitions instead
-of a single consumer process. Exactly-once: foreachBatch gives the
-sink the epoch id; the default transport and the dead-letter writer
-both use epoch/task-scoped file names, so a replayed epoch overwrites
-rather than duplicates.
+of a single consumer process. Replay: foreachBatch gives the sink
+the epoch id; the default transport and the dead-letter writer both
+use epoch/task-scoped file names, so a replayed epoch overwrites
+rather than duplicates. `Boto3FirehoseTransport` re-sends a replayed
+epoch, so Firehose delivery is at-least-once, as in the reference.
 
 The transport is injectable: `LocalDirTransport` (the default, one
 directory per stream), `Boto3FirehoseTransport` (PutRecordBatch,
@@ -360,16 +361,23 @@ def firehose_foreach_batch(
     transport_factory: Callable[[int], Transport] | None = None,
 ):
     """Build a foreachBatch(df, epoch_id) callable delivering each
-    micro-batch through the Firehose protocol. Partition-parallel;
-    epoch-scoped file names keep replays idempotent (exactly-once)."""
+    micro-batch through the Firehose protocol. Partition-parallel.
+
+    The guarantee depends on the transport. With LocalDirTransport
+    (the default) a replayed epoch rewrites the same epoch- and
+    partition-scoped file names, so replay is idempotent. Through a
+    `transport_factory` such as Boto3FirehoseTransport (`--aws`) a
+    replayed epoch re-sends its PutRecordBatch calls and Firehose keeps
+    both copies: at-least-once, as in the reference, where KCL
+    checkpoints after the send."""
 
     def _sink(df, epoch_id: int) -> None:
         def _run(it):
             # Deterministic task id from the partition id: a replayed
             # epoch (or a task retry after a partial write) regenerates
             # the SAME (epoch, task, seq) file names and overwrites
-            # instead of duplicating — a random id would break the
-            # exactly-once claim exactly when it matters.
+            # instead of duplicating — a random id would break replay
+            # idempotence exactly when it matters.
             from pyspark import TaskContext
 
             tc = TaskContext.get()

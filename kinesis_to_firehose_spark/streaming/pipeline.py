@@ -5,11 +5,16 @@ Reference: main.go wires batchconsumer(Kinesis/KCL) → FirehoseSender.
 Here one query, `_start_forwarder`, does decode_enhance + jsonl
 serialization (all narrow, codegen) → foreachBatch Firehose sink with
 checkpointing (KCL checkpoint ≅ Spark streaming checkpoint; both give
-resume + exactly-once). Only the source differs between the two entry
-points: `run_pipeline` reads the parquet file-stream simulator (each
-dropped file ≅ a shard's worth of records), `run_pipeline_replay` the
-`kinesis_replay` shard logs. `drop_stats_stream` is the streaming form
-of the reference's stats.go.
+resume). What a resumed epoch delivers depends on the transport:
+`LocalDirTransport` is replay-idempotent through deterministic file
+names; Firehose under `--aws` is at-least-once, as the reference is
+(KCL checkpoints after the send).
+
+Only the source differs between the two entry points: `run_pipeline`
+reads the parquet file-stream simulator (each dropped file ≅ a shard's
+worth of records), `run_pipeline_replay` the `kinesis_replay` shard
+logs. `drop_stats_stream` is the streaming form of the reference's
+stats.go.
 
 A real cluster deployment would swap the file source for the
 spark-sql-kinesis connector — config surface kept in
@@ -67,15 +72,23 @@ class KinesisSourceConfig:
         connector (`.format("kinesis")`), derived from this config —
         the piece of the wiring that IS testable without the jar.
         Option names follow the qubole/spark-sql-kinesis surface."""
+        from kinesis_to_firehose_spark.sources.kinesis_datasource import (
+            INITIAL_POSITIONS,
+        )
+
+        # KCL initial position → connector starting position, matched
+        # case-insensitively as the replay reader does
+        position = self.initial_position.upper()
+        if position not in INITIAL_POSITIONS:
+            raise ValueError(
+                f"initial_position {self.initial_position!r} is not one "
+                "of: " + ", ".join(INITIAL_POSITIONS)
+            )
         opts = {
             "streamName": self.stream_name,
             "endpointUrl": f"https://kinesis.{self.region}.amazonaws.com",
             "awsUseInstanceProfile": "true",
-            # KCL initial position → connector starting position
-            "startingPosition": {
-                "LATEST": "latest",
-                "TRIM_HORIZON": "trim_horizon",
-            }[self.initial_position],
+            "startingPosition": position.lower(),
             # maxRecords per GetRecords call (consumer.properties)
             "kinesis.executor.maxFetchRecordsPerShard": str(self.max_records),
             # idleTimeBetweenReadsInMillis → fetch wait

@@ -523,6 +523,33 @@ def test_ngram_jaccard_prefix_filter_matches_naive(spark, tmp_path):
     assert len(got) > 10  # planted twins actually matched
 
 
+def _inplan_ivf(n, cents):
+    """Multi-probe IVF top-k computed in-plan from `cents`: the query
+    ranking, assignment and probe the persisted index composes."""
+    from kinesis_to_firehose_spark.operators.similarity import (
+        N_QUERIES,
+        _assign_cells,
+        _ivf_probe_topk,
+        _ranked_cells,
+    )
+
+    queries = n.filter(F.col("vec_id") < N_QUERIES)
+    return _ivf_probe_topk(
+        n, _ranked_cells(queries, cents), _assign_cells(n, cents)
+    )
+
+
+def _seed_centroids(n):
+    """The seed codebook: vectors vec_id < N_CENTROIDS as centroids."""
+    from kinesis_to_firehose_spark.operators.similarity import N_CENTROIDS
+
+    return n.filter(F.col("vec_id") < N_CENTROIDS).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"),
+    )
+
+
 def test_ivf_training_beats_seed_on_clustered_data(spark, tmp_path):
     """Lloyd-trained centroids must rescue the degenerate-seed case:
     the first 8 vectors (= the seed centroids AND the queries) are all
@@ -533,10 +560,7 @@ def test_ivf_training_beats_seed_on_clustered_data(spark, tmp_path):
 
     from kinesis_to_firehose_spark.operators.dedup import normed_embeddings
     from kinesis_to_firehose_spark.operators.similarity import (
-        _ivf_probe_topk,
-        _ranked_cells,
         ann_bruteforce_topk,
-        ann_ivf_topk,
         train_ivf_centroids,
     )
 
@@ -573,18 +597,9 @@ def test_ivf_training_beats_seed_on_clustered_data(spark, tmp_path):
             len(got.get(q, set()) & b) for q, b in brute.items()
         ) / sum(len(b) for b in brute.values())
 
-    seed_rec = recall(ann_ivf_topk(spark, d))
     n = normed_embeddings(spark, d)
-    trained = train_ivf_centroids(spark, d)
-    from kinesis_to_firehose_spark.operators.similarity import (
-        N_QUERIES,
-        _assign_cells,
-    )
-
-    ranked_q = _ranked_cells(
-        n.filter(F.col("vec_id") < N_QUERIES), trained
-    )
-    tr_rec = recall(_ivf_probe_topk(n, ranked_q, _assign_cells(n, trained)))
+    seed_rec = recall(_inplan_ivf(n, _seed_centroids(n)))
+    tr_rec = recall(_inplan_ivf(n, train_ivf_centroids(spark, d)))
     assert tr_rec > seed_rec + 0.2, f"trained {tr_rec} vs seed {seed_rec}"
 
 
@@ -649,15 +664,17 @@ def test_minhash_store_pairs_equal_inplan(spark, tmp_path, monkeypatch):
     assert stored == inplan
 
 
-def test_connected_components_collapse_planted_chain(spark, tmp_path):
+def test_connected_components_collapse_planted_chain(
+    spark, tmp_path, monkeypatch
+):
     """A near-dup CHAIN (A~B, B~C, A·C more distant) must land in ONE
     cluster labeled by the min doc id — transitivity that pairwise
     output alone can't express."""
     import random as _random
 
-    from kinesis_to_firehose_spark.operators.dedup import (
-        dedup_connected_components,
-    )
+    from kinesis_to_firehose_spark.operators.dedup import dedup_cc_star
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
 
     rng = _random.Random(3)
     base = [rng.choice(WORDS) for _ in range(80)]
@@ -675,7 +692,7 @@ def test_connected_components_collapse_planted_chain(spark, tmp_path):
 
     out = {
         r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-        for r in dedup_connected_components(spark, str(tmp_path)).collect()
+        for r in dedup_cc_star(spark, str(tmp_path)).collect()
     }
     assert out[10] == (10, 3)
     assert out[11] == (10, 3)
@@ -703,18 +720,33 @@ def test_star_components_log_rounds_on_adversarial_path(spark):
     assert rounds <= 12, rounds
 
 
-def test_cc_star_matches_label_propagation(spark):
-    """Both CC algorithms must produce identical clusters on the real
-    LSH candidate pairs."""
-    from kinesis_to_firehose_spark.operators.dedup import (
-        dedup_cc_star,
-        dedup_connected_components,
-    )
+def test_star_components_fails_loudly_at_round_cap(spark, monkeypatch):
+    """A graph still changing at _STAR_MAX_ROUNDS must raise, not
+    return the partially collapsed labels (split clusters)."""
+    import kinesis_to_firehose_spark.operators.dedup as dedup
 
-    sf = "/root/testdata/sf0.001"
-    a = {tuple(r) for r in dedup_connected_components(spark, sf).collect()}
-    b = {tuple(r) for r in dedup_cc_star(spark, sf).collect()}
-    assert a == b
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(255)], "src long, dst long"
+    )
+    monkeypatch.setattr(dedup, "_STAR_MAX_ROUNDS", 1)
+    with pytest.raises(ValueError, match="did not converge in 1 rounds"):
+        dedup.star_components(path)
+
+
+def test_cc_star_collapses_long_chain(spark, monkeypatch):
+    """A 40-edge chain of candidate pairs (doc_i ~ doc_{i+1} only, the
+    templated-series shape whose diameter grows with its length) is one
+    cluster of 41 labelled by its minimum doc id."""
+    import kinesis_to_firehose_spark.operators.dedup as dedup
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_id_1 long, doc_id_2 long"
+    )
+    monkeypatch.setattr(
+        dedup, "lsh_store_pairs_tau", lambda spark, sf_dir, tau: chain
+    )
+    out = {tuple(r) for r in dedup.dedup_cc_star(spark, "unused").collect()}
+    assert out == {(i, 0, 41) for i in range(41)}
 
 
 def test_substring_dedup_flags_planted_boilerplate(spark, tmp_path):
@@ -1193,18 +1225,15 @@ def test_provenance_chain_walks_planted_chain(spark):
 
 
 def test_ann_index_search_matches_inplan_ivf(spark, tmp_path):
-    """The persisted ANN index serves exactly what the in-plan IVF op
-    computes, and the search plan reads the store (no corpus-side
-    re-assignment)."""
+    """The persisted ANN index serves exactly what the seed-centroid
+    IVF computes in-plan, and the search plan reads the store (no
+    corpus-side re-assignment)."""
     from pyspark.sql import functions as F
 
     from kinesis_to_firehose_spark.operators.dedup import (
         normed_embeddings,
     )
-    from kinesis_to_firehose_spark.operators.similarity import (
-        N_QUERIES,
-        ann_ivf_topk,
-    )
+    from kinesis_to_firehose_spark.operators.similarity import N_QUERIES
     from kinesis_to_firehose_spark.plans.explain import physical_plan
     from kinesis_to_firehose_spark.sources.ann_index import (
         build_ann_index,
@@ -1214,13 +1243,12 @@ def test_ann_index_search_matches_inplan_ivf(spark, tmp_path):
     sf = "/root/testdata/sf0.01"
     path = str(tmp_path / "ann_index")
     build_ann_index(spark, sf, path)
-    queries = normed_embeddings(spark, sf).filter(
-        F.col("vec_id") < N_QUERIES
-    )
+    n = normed_embeddings(spark, sf)
+    queries = n.filter(F.col("vec_id") < N_QUERIES)
     got = search_ann_index(spark, queries, path)
     assert str(tmp_path) in physical_plan(got)
     assert [tuple(r) for r in got.collect()] == [
-        tuple(r) for r in ann_ivf_topk(spark, sf).collect()
+        tuple(r) for r in _inplan_ivf(n, _seed_centroids(n)).collect()
     ]
 
 

@@ -124,8 +124,7 @@ def test_no_accidental_cartesian_or_nested_loop(spark):
     DELIBERATE = {
         # tiny broadcast cross joins by design:
         "ann_bruteforce_topk",   # 5 query vectors × candidates
-        "ann_ivf_topk",          # centroid list × vectors
-        "ann_ivf_trained_topk",  # same, trained centroids
+        "ann_ivf_trained_topk",  # trained centroid list × vectors
         "ann_ivfpq_topk",        # same coarse centroid list × vectors
         "ann_index_search",      # stored centroid list × query vectors
         "ann_index_probe",       # same stored-centroid cross, epoch store

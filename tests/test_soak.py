@@ -5,7 +5,7 @@ suite skips it (conftest gates on the -m expression). One test drives
 the forwarder over the sf0.1 events with chaos (transient per-record
 transport failures, a mid-run crash, and a checkpoint restart),
 asserting exactly-once delivery: kinesis_replay → decode/enhance →
-firehose_sink, admission cap 125 records/shard/trigger → ~200
+the Firehose sink, admission cap 125 records/shard/trigger → ~200
 triggers over 100k records, flaky transport + one crash + resume.
 """
 

@@ -188,7 +188,7 @@ def test_dedup_index_continuous_ingest(spark, tmp_path):
         doc_fingerprints(b1),
         doc_band_keys(b1),
         doc_fingerprints(base),
-        doc_band_keys(base, checkpoint=True),
+        doc_band_keys(base),
     )
     assert [tuple(r) for r in probe1.collect()] == [
         tuple(r) for r in expect1.collect()
@@ -201,7 +201,7 @@ def test_dedup_index_continuous_ingest(spark, tmp_path):
         doc_fingerprints(b2),
         doc_band_keys(b2),
         doc_fingerprints(old),
-        doc_band_keys(old, checkpoint=True),
+        doc_band_keys(old),
     )
     got2 = [tuple(r) for r in probe2.collect()]
     assert got2 == [tuple(r) for r in expect2.collect()]

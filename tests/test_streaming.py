@@ -380,6 +380,17 @@ def test_kinesis_reader_options_wiring(spark):
     assert opts["kinesis.executor.maxFetchRecordsPerShard"] == "1500"
     with pytest.raises(RuntimeError, match="connector jar"):
         cfg.reader(spark)
+    # the position is matched case-insensitively; a typo names itself
+    # and the accepted values instead of a bare KeyError
+    lower = KinesisSourceConfig(
+        stream_name="logs-prod", initial_position="latest"
+    )
+    assert lower.reader_options()["startingPosition"] == "latest"
+    typo = KinesisSourceConfig(
+        stream_name="logs-prod", initial_position="LASTEST"
+    )
+    with pytest.raises(ValueError, match="'LASTEST'.*TRIM_HORIZON, LATEST"):
+        typo.reader_options()
 
 
 # ---------------- hypothesis: protocol invariants (pure logic) ---------

@@ -1,6 +1,8 @@
-"""Time named ops exactly like bench.py (best-of-N in one session).
+"""Time named ops exactly like bench.py (best-of-N in one session):
+an untimed count gives the row count, then each timed run writes the
+op's full result to the noop sink.
 
-Usage: python tools/time_ops.py [--action count|noop] [--reps 3] op1,op2,...
+Usage: python tools/time_ops.py [--reps 3] op1,op2,...
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ def main() -> None:
     # positional op list by string equality — an op named like a flag
     # value was silently dropped from the timing set.
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--action", choices=("count", "noop"), default="count")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("ops", nargs="+", help="op names (comma-separable)")
     args = ap.parse_args()
@@ -34,19 +35,17 @@ def main() -> None:
     ops = all_ops()
 
     def run(df):
-        if args.action == "count":
-            return df.count()
         df.write.format("noop").mode("overwrite").save()
-        return None
 
     # warm the session like bench.py does
     ops["q1_pricing_summary"].fn(spark, SF_DIR).count()
     for name in names:
+        n = ops[name].fn(spark, SF_DIR).count()
         spark.sparkContext._jvm.System.gc()
-        best, runs, n = None, 0, None
+        best, runs = None, 0
         for _ in range(args.reps):
             t0 = time.perf_counter()
-            n = run(ops[name].fn(spark, SF_DIR))
+            run(ops[name].fn(spark, SF_DIR))
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
             runs += 1
